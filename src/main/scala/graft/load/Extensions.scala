@@ -16,9 +16,11 @@ trait DataTransformer extends Serializable {
 
 /** Default transform (reference ts_extensions.py:32-49 / P4): every
   * non-timestamp column numeric-coerced (cast-to-double = pd.to_numeric
-  * errors="coerce": garbage -> null), then per-file constant metadata columns
-  * appended as literals (explicit per-file lit beats input_file_name() for
-  * error attribution; survey §7.4 #9).
+  * errors="coerce": garbage -> null), then the per-file constant
+  * `TimeSeriesLoader.FileMetadataColumns` appended as literals. This path
+  * serves in-memory uploads, which have no file behind them; a directory or
+  * path-list load attaches the same columns by looking up each row's
+  * `_metadata.file_path` (see `TimeSeriesLoader.loadFiles`).
   */
 class DefaultDataTransformer extends DataTransformer {
   override def transform(
@@ -32,10 +34,11 @@ class DefaultDataTransformer extends DataTransformer {
       if (timestampColumn.contains(c)) acc
       else acc.withColumn(c, col(c).try_cast("double"))
     }
-    coerced
-      .withColumn("source_file", lit(new java.io.File(meta.filepath).getName))
-      .withColumn("file_start_time", lit(meta.startTime.orNull))
-      .withColumn("file_end_time", lit(meta.endTime.orNull))
+    val values = Seq(lit(new java.io.File(meta.filepath).getName),
+      lit(meta.startTime.orNull), lit(meta.endTime.orNull))
+    TimeSeriesLoader.FileMetadataColumns.zip(values).foldLeft(coerced) {
+      case (acc, (c, v)) => acc.withColumn(c, v)
+    }
   }
 }
 

@@ -80,11 +80,17 @@ final case class LoadedSeries(
   *     Catalyst sees a single scan node: column pruning, limit pushdown and
   *     partition-level parallelism all apply), not N unioned per-file plans
   *     whose lineage would grow O(files);
-  *   - per-file constants (source_file, file_start_time, file_end_time)
-  *     attach via a BROADCAST join on input_file_name() against the tiny
-  *     metadata table — no shuffle;
+  *   - per-file constants (FileMetadataColumns) attach in each scan by
+  *     looking up the scan's own `_metadata.file_path` in a driver-side map
+  *     — no join, no shuffle, and the plan's size estimate stays that of
+  *     the CSV bytes;
   *   - the optional global time sort is the only wide exchange.
   */
+object TimeSeriesLoader {
+  /** Per-file columns on every loaded row (P4): file name, start time, end time. */
+  val FileMetadataColumns: Seq[String] = Seq("source_file", "file_start_time", "file_end_time")
+}
+
 class TimeSeriesLoader(
     spark: SparkSession,
     discovery: FileDiscoveryConfig = FileDiscoveryConfig(),
@@ -99,6 +105,7 @@ class TimeSeriesLoader(
     sortByTimestamp: Boolean = true,
     enforceStructure: Boolean = true
 ) {
+  import TimeSeriesLoader.FileMetadataColumns
   private val errors = new ErrorCollector
 
   private def filt: FileFilter =
@@ -166,41 +173,46 @@ class TimeSeriesLoader(
   /** S5: header of the first file without reading data (manual limit
     * pushdown, reference nrows=0 at load_file.py:1727).
     */
-  def originalColumnNames(path: String): Seq[String] = headerOf(Paths.get(path))
+  def originalColumnNames(path: String): Seq[String] = sample(Paths.get(path), 0)._1
 
-  private def headerOf(p: Path): Seq[String] = {
+  /** The header and the first `probeRows` data lines, split on the
+    * delimiter and trimmed, from ONE bounded read of the file.
+    */
+  private def sample(p: Path, probeRows: Int): (Seq[String], Vector[Array[String]]) = {
+    val sep = java.util.regex.Pattern.quote(loading.delimiter)
     val s = Files.lines(p)
     try {
-      val it = s.iterator()
+      val it = s.iterator().asScala
       if (!it.hasNext) throw new DataLoadingException(s"File is empty: $p")
-      it.next().split(java.util.regex.Pattern.quote(loading.delimiter)).map(_.trim).toSeq
+      val header = it.next().split(sep).map(_.trim).toSeq
+      (header, it.take(probeRows).map(_.split(sep, -1).map(_.trim)).toVector)
     } finally s.close()
   }
 
   /** P5: per-file header + dtype enforcement against file #1 (reference
     * load_file.py:1489-1531: column mismatch at :1513-1522, np.issubdtype
-    * dtype mismatch at :1525-1531). Header/probe reads only — metadata-plane
+    * dtype mismatch at :1525-1531). One bounded read per file — metadata-plane
     * cost, the data itself is scanned exactly once, later. Returns every
     * file's ordered header: a file with the same column SET in a different
     * ORDER is legal (pandas concat aligns by name) but must get its own
     * positional schema at read time — see loadFiles.
     */
   private def enforceHeaders(metas: Seq[FileMetadata]): Seq[Seq[String]] = {
-    val headers = metas.map(m => headerOf(Paths.get(m.filepath)))
+    val samples = metas.map(m => sample(Paths.get(m.filepath), if (enforceStructure) 10 else 0))
+    val headers = samples.map(_._1)
     val ref = headers.head
     if (enforceStructure) {
-      val refNumeric = ref.zip(probeNumeric(Paths.get(metas.head.filepath), ref.size)).toMap
-      metas.tail.zip(headers.tail).foreach { case (m, h) =>
+      val refNumeric = ref.zip(numericColumns(samples.head._2, ref.size)).toMap
+      metas.tail.zip(samples.tail).foreach { case (m, (h, rows)) =>
         if (h.toSet != ref.toSet) {
           val msg = s"Column mismatch in ${m.filepath}: expected ${ref.mkString(",")} got ${h.mkString(",")}"
           errors.add(ProcessingError(msg, ErrorSeverity.Error, "DataLoadingError", Some(m.filepath)))
           throw new DataLoadingException(msg)
         }
-        val thisNumeric = probeNumeric(Paths.get(m.filepath), h.size)
         // compare BY NAME (not position): reordered files align by name at
         // read time, so only a column flipping numeric<->non-numeric under
         // its own name is the reference's "Data type mismatch"
-        h.zip(thisNumeric).foreach { case (cname, tn) =>
+        h.zip(numericColumns(rows, h.size)).foreach { case (cname, tn) =>
           (refNumeric(cname), tn) match {
             case (Some(a), Some(b)) if a != b =>
               val msg = s"Data type mismatch in ${m.filepath}: column '$cname'"
@@ -214,41 +226,45 @@ class TimeSeriesLoader(
     headers
   }
 
-  /** Per-column numeric-ness from the first `probeRows` data lines:
-    * Some(true)=all non-empty values parse as double, Some(false)=some
-    * don't, None=no data observed. Bounded read (limit-pushdown probe).
+  /** Per-column numeric-ness of sampled data lines: Some(true)=all
+    * non-empty values parse as double, Some(false)=some don't, None=no data
+    * observed.
     */
-  private def probeNumeric(p: Path, nCols: Int, probeRows: Int = 10): Seq[Option[Boolean]] = {
-    val sep = java.util.regex.Pattern.quote(loading.delimiter)
+  private def numericColumns(rows: Vector[Array[String]], nCols: Int): Seq[Option[Boolean]] = {
     val dec = java.util.regex.Pattern.quote(loading.decimal)
-    val s = Files.lines(p)
-    try {
-      val rows = s.iterator().asScala.drop(1).take(probeRows)
-        .map(_.split(sep, -1).map(_.trim).padTo(nCols, "")).toVector
-      (0 until nCols).map { i =>
-        val vals = rows.map(_(i)).filter(_.nonEmpty)
-        if (vals.isEmpty) None
-        else Some(vals.forall(v =>
-          scala.util.Try(v.replaceAll(dec, ".").toDouble).isSuccess))
-      }
-    } finally s.close()
+    (0 until nCols).map { i =>
+      val vals = rows.map(_.lift(i).getOrElse("")).filter(_.nonEmpty)
+      if (vals.isEmpty) None
+      else Some(vals.forall(v =>
+        scala.util.Try(v.replaceAll(dec, ".").toDouble).isSuccess))
+    }
   }
 
   private def detectTimestampColumn(header: Seq[String]): Option[String] =
     loading.timestampColumn.orElse(header.find(_.toLowerCase.contains("time")))
 
   /** Steps 4+: one scan per distinct header ordering (one scan, period, in
-    * the overwhelmingly common identical-headers case) + broadcast metadata
-    * attach. A positional schema over a REORDERED file would silently
-    * misassign values (the reference's pandas concat aligns by name), so
-    * files are grouped by their exact ordered header and each group reads
-    * with its own schema before a by-name union.
+    * the overwhelmingly common identical-headers case), each tagging its
+    * rows with per-file metadata. A positional schema over a REORDERED file
+    * would silently misassign values (the reference's pandas concat aligns
+    * by name), so files are grouped by their exact ordered header and each
+    * group reads with its own schema before a by-name union.
     */
   def loadFiles(metas: Seq[FileMetadata], stats: Option[DiscoveryStats]): LoadedSeries = {
-    import spark.implicits._
     require(metas.nonEmpty, "no files to load")
     val headers = enforceHeaders(metas)
     val tsColRaw = detectTimestampColumn(headers.head)
+
+    // per-file metadata keyed by the exact string the scan reports as
+    // _metadata.file_path (a Hadoop-qualified, URI-encoded "file:/..." URI);
+    // the O(1) map lookup runs per row inside the scan's own stage; the
+    // tuple's _1.._3 follow FileMetadataColumns' order
+    val byPath = metas.map { m =>
+      val f = new java.io.File(m.filepath).getAbsoluteFile
+      new org.apache.hadoop.fs.Path(f.toURI).toUri.toString ->
+        ((f.getName, m.startTime.orNull, m.endTime.orNull))
+    }.toMap
+    val tagOf = udf((p: String) => byPath.get(p))
 
     // group by ordered header, preserving first-appearance order so the
     // result's column order is file #1's order (pandas concat parity)
@@ -256,33 +272,16 @@ class TimeSeriesLoader(
       (h, metas.zip(headers).collect { case (m, hh) if hh == h => m.filepath })
     }
     // all-string schema: coercion below reproduces to_numeric(errors=coerce)
-    val raw = grouped
+    val withMeta = grouped
       .map { case (h, paths) =>
         val schema = StructType(h.map(c => StructField(c, StringType, nullable = true)))
-        csvReader().schema(schema).csv(paths: _*)
+        val scan = csvReader().schema(schema).csv(paths: _*)
+        val tag = tagOf(scan.metadataColumn("_metadata")("file_path"))
+        FileMetadataColumns.zipWithIndex.foldLeft(scan) { case (acc, (c, i)) =>
+          acc.withColumn(c, tag(s"_${i + 1}"))
+        }
       }
       .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
-
-    // per-file metadata via broadcast join (no shuffle, no O(files) plan).
-    // Join key is the NORMALIZED plain path: input_file_name() yields a
-    // URL-encoded URI ("file:///a/b%20c.csv") while File.toURI gives
-    // "file:/a/b c.csv" — raw strings never match. url_decode alone is
-    // FORM-decoding ('+' -> space, stray '%' throws under ANSI); protect
-    // '+' first and fall back to the raw name on undecodable input.
-    val metaDf = broadcast(
-      metas
-        .map(m => (new java.io.File(m.filepath).getAbsolutePath,
-          new java.io.File(m.filepath).getName,
-          m.startTime.orNull, m.endTime.orNull))
-        .toDF("__path", "source_file", "file_start_time", "file_end_time")
-    )
-    val decodedName = coalesce(
-      expr("""try_url_decode(regexp_replace(input_file_name(), '\\+', '%2B'))"""),
-      input_file_name())
-    val withMeta = raw
-      .withColumn("__path", regexp_replace(decodedName, "^file:/+", "/"))
-      .join(metaDf, Seq("__path"), "left")
-      .drop("__path")
 
     val transformed = applyTransform(withMeta, tsColRaw)
     assemble(Seq(transformed), metas, stats, alreadyUnioned = true, tsColRaw)
@@ -298,7 +297,6 @@ class TimeSeriesLoader(
       tsColRaw: Option[String],
       skipTransformer: Boolean = false
   ): DataFrame = {
-    val metaCols = Set("source_file", "file_start_time", "file_end_time")
     val base =
       if (skipTransformer) df
       else {
@@ -311,7 +309,7 @@ class TimeSeriesLoader(
           else regexp_replace(c,
             java.util.regex.Pattern.quote(loading.decimal), ".").try_cast("double")
         df.columns.foldLeft(df) { (acc, c) =>
-          if (tsColRaw.contains(c) || metaCols(c)) acc
+          if (tsColRaw.contains(c) || FileMetadataColumns.contains(c)) acc
           else acc.withColumn(c, numeric(col(c)))
         }
       }
@@ -364,7 +362,7 @@ class TimeSeriesLoader(
     // O1: timestamp detection + global sort
     val tsCol = tsColKnown.orElse(
       unioned.columns.find(c =>
-        c.toLowerCase.contains("time") && !Set("file_start_time", "file_end_time")(c) &&
+        c.toLowerCase.contains("time") && !FileMetadataColumns.contains(c) &&
           unioned.schema(c).dataType == TimestampType)
     )
     val sorted = (tsCol, sortByTimestamp) match {
@@ -398,8 +396,7 @@ class TimeSeriesLoader(
   }
 
   private def applyNaming(df: DataFrame): DataFrame = {
-    val metaCols = Set("source_file", "file_start_time", "file_end_time")
-    val newNames = df.columns.toIndexedSeq.map(c => if (metaCols(c)) c else cleanName(c))
+    val newNames = df.columns.toIndexedSeq.map(c => if (FileMetadataColumns.contains(c)) c else cleanName(c))
     df.toDF(newNames: _*)
   }
 }

@@ -70,7 +70,8 @@ class PlanSpec extends SparkSpec {
     assert(plan.toLowerCase.contains("partial_count"), s"no partial agg:\n$plan")
   }
 
-  test("metadata attach in the loader plans as a broadcast join (no shuffle)") {
+  test("metadata attach in the loader plans as a projection in the scan stage " +
+    "(no join, no shuffle beyond the time sort)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-plan-load")
     java.nio.file.Files.writeString(
       dir.resolve("01-01-2024 00_00_00 - 01-01-2024 01_00_00.csv"),
@@ -80,8 +81,10 @@ class PlanSpec extends SparkSpec {
         strategy = graft.core.ValidationStrategy.None_))
       .load(dir.toString)
     val plan = loaded.df.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), s"metadata attach not broadcast:\n$plan")
-    assert(!plan.contains("SortMergeJoin"), "metadata attach must not shuffle")
+    assert(!plan.contains("Join"), s"metadata attach must not join:\n$plan")
+    assert("Exchange (?!rangepartitioning)".r.findFirstIn(plan).isEmpty,
+      s"only the time sort may shuffle:\n$plan")
+    assert(plan.contains("_metadata"), s"metadata attach must read the scan's _metadata:\n$plan")
   }
 
   test("co-bucketed tables join WITHOUT a shuffle exchange") {

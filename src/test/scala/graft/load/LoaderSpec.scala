@@ -6,6 +6,7 @@ import graft.meta.{Discovery, TimeMetadataExtractor}
 import java.nio.file.{Files, Path}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
+import scala.jdk.CollectionConverters._
 
 /** End-to-end CSV pipeline parity (the reference's flagship
   * initialize_processing; tests/test_load_file.py:890-897, 1336-1352 pins:
@@ -300,18 +301,36 @@ class LoaderSpec extends SparkSpec {
     }
   }
 
-  test("metadata attach survives '+' and '%' in file paths (URI decode, " +
-    "not form decode: url_decode('+')=' ' would miss the broadcast join)") {
+  test("metadata attach keeps exact per-file values for ' ', '+' and '%' in " +
+    "file paths, on both sides of a by-name union") {
     val dir = tmpDir()
     val sub = Files.createDirectories(dir.resolve("a+b %ct"))
-    Files.writeString(sub.resolve("01-01-2024 00_00_00 - 01-01-2024 01_00_00.csv"),
-      "timestamp;v\n01/01/2024 00:00;1.5\n")
+    val plain = "01-01-2024 00_00_00 - 01-01-2024 01_00_00.csv"
+    // a space, a '+' and a valid escape '%41' (a URL decode would read 'A');
+    // the swapped header gives this file its own scan before the union
+    val odd = "x y+z%41 01-01-2024 01_00_00 - 01-01-2024 02_00_00.csv"
+    Files.writeString(sub.resolve(plain), "timestamp;v\n01/01/2024 00:00;1.5\n")
+    Files.writeString(sub.resolve(odd), "v;timestamp\n2.5;01/01/2024 01:00\n")
     val loaded = new TimeSeriesLoader(spark,
       tsConfig = TimeSeriesConfig(strategy = ValidationStrategy.None_))
       .load(sub.toString)
-    val r = loaded.df.select("source_file", "file_start_time").head()
-    assert(!r.isNullAt(0), "source_file null: join key failed to decode")
-    assert(!r.isNullAt(1), "file_start_time null: join key failed to decode")
+    val got = loaded.df.orderBy("timestamp")
+      .select("v", "source_file", "file_start_time", "file_end_time").collect()
+      .map(r => (r.getDouble(0), r.getString(1), r.getTimestamp(2), r.getTimestamp(3))).toSeq
+    assert(got == Seq(
+      (1.5, plain, ts("2024-01-01 00:00:00"), ts("2024-01-01 01:00:00")),
+      (2.5, odd, ts("2024-01-01 01:00:00"), ts("2024-01-01 02:00:00"))))
+  }
+
+  test("size estimate of the loaded frame stays within 4x the CSV bytes on disk") {
+    val dir = tmpDir()
+    writeFixture(dir)
+    val csvBytes = Files.list(dir).iterator().asScala.map(Files.size).sum
+    val loaded = new TimeSeriesLoader(spark,
+      tsConfig = TimeSeriesConfig(strategy = ValidationStrategy.None_))
+      .load(dir.toString)
+    val estimate = loaded.concatMetadata("size_in_bytes").asInstanceOf[BigInt]
+    assert(estimate <= 4 * csvBytes, s"estimate $estimate B for $csvBytes B of CSV")
   }
 
   test("hook chain shares ONE context; OutlierRemovalHook records " +
