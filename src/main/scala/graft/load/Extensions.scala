@@ -1,6 +1,6 @@
 package graft.load
 
-import graft.core.FileMetadata
+import graft.core.LoadingConfig
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -9,35 +9,39 @@ import org.apache.spark.sql.functions._
   * Catalyst expressions — per the survey (§2.11) nothing in the reference
   * needs a custom Catalyst node; hooks stay declarative so Catalyst still
   * optimizes through them.
+  *
+  * `DataTransformer` is the load step between the raw read and the
+  * timestamp parse (reference ts_extensions.py:14-49). It is called ONCE per
+  * load, for files and uploads alike, on the whole unioned frame: every CSV
+  * column is still a string, and `TimeSeriesLoader.FileMetadataColumns` are
+  * already attached, so per-file values are columns, not arguments. A
+  * timestamp column the transformer leaves as a string is parsed
+  * afterwards; one it turns into a timestamp is kept as is.
   */
 trait DataTransformer extends Serializable {
-  def transform(df: DataFrame, timestampColumn: Option[String], meta: FileMetadata): DataFrame
+  def transform(df: DataFrame, timestampColumn: Option[String], loading: LoadingConfig): DataFrame
 }
 
-/** Default transform (reference ts_extensions.py:32-49 / P4): every
-  * non-timestamp column numeric-coerced (cast-to-double = pd.to_numeric
-  * errors="coerce": garbage -> null), then the per-file constant
-  * `TimeSeriesLoader.FileMetadataColumns` appended as literals. This path
-  * serves in-memory uploads, which have no file behind them; a directory or
-  * path-list load attaches the same columns by looking up each row's
-  * `_metadata.file_path` (see `TimeSeriesLoader.loadFiles`).
+/** Default transform (reference ts_extensions.py:32-49 / P4), the only
+  * copy of the numeric coercion: every column but the timestamp and the
+  * metadata columns becomes a double, with pd.to_numeric errors="coerce"
+  * semantics: garbage -> null (a plain cast THROWS under Spark 4 ANSI
+  * mode). A non-"." `loading.decimal` (e.g. European "21,5")
+  * normalises to "." first (survey §7.4 #8).
   */
 class DefaultDataTransformer extends DataTransformer {
   override def transform(
       df: DataFrame,
       timestampColumn: Option[String],
-      meta: FileMetadata
+      loading: LoadingConfig
   ): DataFrame = {
-    // try_cast, not cast: ANSI mode (Spark 4 default) makes plain cast THROW
-    // on malformed input; to_numeric(errors="coerce") semantics require null
-    val coerced = df.columns.foldLeft(df) { (acc, c) =>
-      if (timestampColumn.contains(c)) acc
-      else acc.withColumn(c, col(c).try_cast("double"))
-    }
-    val values = Seq(lit(new java.io.File(meta.filepath).getName),
-      lit(meta.startTime.orNull), lit(meta.endTime.orNull))
-    TimeSeriesLoader.FileMetadataColumns.zip(values).foldLeft(coerced) {
-      case (acc, (c, v)) => acc.withColumn(c, v)
+    def numeric(c: org.apache.spark.sql.Column) =
+      (if (loading.decimal == ".") c
+       else regexp_replace(c, java.util.regex.Pattern.quote(loading.decimal), "."))
+        .try_cast("double")
+    df.columns.foldLeft(df) { (acc, c) =>
+      if (timestampColumn.contains(c) || TimeSeriesLoader.FileMetadataColumns.contains(c)) acc
+      else acc.withColumn(c, numeric(col(c)))
     }
   }
 }
@@ -108,15 +112,16 @@ class OutlierRemovalHook(columns: Seq[String], threshold: Double = 3.0)
   }
 }
 
-/** Per-file timestamp normalization example hook analogue (reference
+/** Timestamp normalization example transformer (reference
   * ts_extensions.py:128-161): parse a string column to timestamp with a
-  * strict format.
+  * strict format. Replaces the default transformer, so no numeric
+  * coercion runs.
   */
 class TimestampNormalizer(column: String, format: String) extends DataTransformer {
   override def transform(
       df: DataFrame,
       timestampColumn: Option[String],
-      meta: FileMetadata
+      loading: LoadingConfig
   ): DataFrame =
     if (df.columns.contains(column))
       df.withColumn(column, to_timestamp(col(column), format))

@@ -70,25 +70,38 @@ final case class LoadedSeries(
 
 /** The flagship pipeline (reference FileDataFrame.initialize_processing,
   * load_file.py:1263-1323): discover -> extract metadata -> validate
-  * sequence -> load CSVs -> coerce -> attach metadata -> union -> parse
-  * timestamps -> sort -> clean names -> hooks.
+  * sequence -> header check -> read + attach metadata -> union -> transform
+  * -> parse timestamps -> sort -> clean names -> hooks.
   *
   * Spark-first shape (NOT the reference's per-file pandas loop):
   *   - steps 1-3 are metadata-plane and stay on the driver (file listing is
   *     driver work in Spark too); row data NEVER lands on the driver;
-  *   - the read is ONE multi-path csv scan with an enforced schema (so
-  *     Catalyst sees a single scan node: column pruning, limit pushdown and
-  *     partition-level parallelism all apply), not N unioned per-file plans
-  *     whose lineage would grow O(files);
+  *   - the read is ONE multi-path csv scan per distinct header with an
+  *     enforced all-string schema (so Catalyst sees a single scan node:
+  *     column pruning, limit pushdown and partition-level parallelism all
+  *     apply), not N unioned per-file plans whose lineage would grow
+  *     O(files);
   *   - per-file constants (FileMetadataColumns) attach in each scan by
   *     looking up the scan's own `_metadata.file_path` in a driver-side map
   *     — no join, no shuffle, and the plan's size estimate stays that of
-  *     the CSV bytes;
+  *     the CSV bytes. In-memory uploads attach the same values as literals;
+  *   - from there files and uploads share one path: the same header check,
+  *     one `DataTransformer` call on the whole frame, one timestamp parse;
   *   - the optional global time sort is the only wide exchange.
   */
 object TimeSeriesLoader {
   /** Per-file columns on every loaded row (P4): file name, start time, end time. */
   val FileMetadataColumns: Seq[String] = Seq("source_file", "file_start_time", "file_end_time")
+
+  /** One file's FileMetadataColumns values, in their order. */
+  private def metadataValues(m: FileMetadata): (String, java.sql.Timestamp, java.sql.Timestamp) =
+    (new java.io.File(m.filepath).getName, m.startTime.orNull, m.endTime.orNull)
+
+  /** Adds FileMetadataColumns from a struct whose `_1.._3` follow their order. */
+  private def withMetadata(df: DataFrame, values: org.apache.spark.sql.Column): DataFrame =
+    FileMetadataColumns.zipWithIndex.foldLeft(df) { case (acc, (c, i)) =>
+      acc.withColumn(c, values(s"_${i + 1}"))
+    }
 }
 
 class TimeSeriesLoader(
@@ -105,7 +118,7 @@ class TimeSeriesLoader(
     sortByTimestamp: Boolean = true,
     enforceStructure: Boolean = true
 ) {
-  import TimeSeriesLoader.FileMetadataColumns
+  import TimeSeriesLoader._
   private val errors = new ErrorCollector
 
   private def filt: FileFilter =
@@ -154,51 +167,61 @@ class TimeSeriesLoader(
         .getOrElse(FileMetadata(name))
     }
     validateSequence(metas)
-    val perFile = valid.zip(metas).map { case ((name, bytes), meta) =>
-      val lines = new String(bytes, loading.encoding).linesIterator.toSeq
-      val ds = spark.createDataset(lines)
-      val raw = csvReader().csv(ds)
-      finishOne(raw, meta)
+    val lines = valid.map { case (_, bytes) => new String(bytes, loading.encoding).linesIterator.toSeq }
+    val headers = enforceHeaders(metas,
+      metas.zip(lines).map { case (m, ls) => sample(m.filepath, ls.iterator, probeRows) })
+    val parts = metas.zip(headers).zip(lines).map { case ((m, h), ls) =>
+      withMetadata(csvReader(h).csv(spark.createDataset(ls)), typedLit(metadataValues(m)))
     }
-    assemble(perFile, metas, None)
+    assemble(parts, headers.head, metas, None)
   }
 
-  private def csvReader() =
+  /** All-string reader over one ordered header: the transformer step
+    * reproduces to_numeric(errors=coerce) on top of it.
+    */
+  private def csvReader(header: Seq[String]) =
     spark.read
       .option("sep", loading.delimiter)
       .option("header", "true")
       .option("encoding", loading.encoding)
       .option("mode", "PERMISSIVE")
+      .schema(StructType(header.map(c => StructField(c, StringType, nullable = true))))
 
   /** S5: header of the first file without reading data (manual limit
     * pushdown, reference nrows=0 at load_file.py:1727).
     */
-  def originalColumnNames(path: String): Seq[String] = sample(Paths.get(path), 0)._1
+  def originalColumnNames(path: String): Seq[String] = sampleFile(Paths.get(path), 0)._1
 
-  /** The header and the first `probeRows` data lines, split on the
-    * delimiter and trimmed, from ONE bounded read of the file.
-    */
-  private def sample(p: Path, probeRows: Int): (Seq[String], Vector[Array[String]]) = {
+  /** A source's header and first data lines, split on the delimiter and trimmed. */
+  private type Sample = (Seq[String], Vector[Array[String]])
+
+  /** Data lines `enforceHeaders` needs per source. */
+  private def probeRows: Int = if (enforceStructure) 10 else 0
+
+  private def sample(name: String, lines: Iterator[String], rows: Int): Sample = {
     val sep = java.util.regex.Pattern.quote(loading.delimiter)
+    if (!lines.hasNext) throw new DataLoadingException(s"File is empty: $name")
+    val header = lines.next().split(sep).map(_.trim).toSeq
+    (header, lines.take(rows).map(_.split(sep, -1).map(_.trim)).toVector)
+  }
+
+  /** `sample` from ONE bounded read of a file. */
+  private def sampleFile(p: Path, rows: Int): Sample = {
     val s = Files.lines(p)
-    try {
-      val it = s.iterator().asScala
-      if (!it.hasNext) throw new DataLoadingException(s"File is empty: $p")
-      val header = it.next().split(sep).map(_.trim).toSeq
-      (header, it.take(probeRows).map(_.split(sep, -1).map(_.trim)).toVector)
-    } finally s.close()
+    try sample(p.toString, s.iterator().asScala, rows)
+    finally s.close()
   }
 
   /** P5: per-file header + dtype enforcement against file #1 (reference
     * load_file.py:1489-1531: column mismatch at :1513-1522, np.issubdtype
-    * dtype mismatch at :1525-1531). One bounded read per file — metadata-plane
-    * cost, the data itself is scanned exactly once, later. Returns every
-    * file's ordered header: a file with the same column SET in a different
-    * ORDER is legal (pandas concat aligns by name) but must get its own
-    * positional schema at read time — see loadFiles.
+    * dtype mismatch at :1525-1531), for files and uploads alike. One bounded
+    * sample per file — metadata-plane cost, the data itself is scanned
+    * exactly once, later. Returns every file's ordered header: a file with
+    * the same column SET in a different ORDER is legal (pandas concat aligns
+    * by name) but must get its own positional schema at read time — see
+    * loadFiles.
     */
-  private def enforceHeaders(metas: Seq[FileMetadata]): Seq[Seq[String]] = {
-    val samples = metas.map(m => sample(Paths.get(m.filepath), if (enforceStructure) 10 else 0))
+  private def enforceHeaders(metas: Seq[FileMetadata], samples: Seq[Sample]): Seq[Seq[String]] = {
     val headers = samples.map(_._1)
     val ref = headers.head
     if (enforceStructure) {
@@ -252,73 +275,25 @@ class TimeSeriesLoader(
     */
   def loadFiles(metas: Seq[FileMetadata], stats: Option[DiscoveryStats]): LoadedSeries = {
     require(metas.nonEmpty, "no files to load")
-    val headers = enforceHeaders(metas)
-    val tsColRaw = detectTimestampColumn(headers.head)
+    val headers = enforceHeaders(metas, metas.map(m => sampleFile(Paths.get(m.filepath), probeRows)))
 
     // per-file metadata keyed by the exact string the scan reports as
     // _metadata.file_path (a Hadoop-qualified, URI-encoded "file:/..." URI);
-    // the O(1) map lookup runs per row inside the scan's own stage; the
-    // tuple's _1.._3 follow FileMetadataColumns' order
+    // the O(1) map lookup runs per row inside the scan's own stage
     val byPath = metas.map { m =>
-      val f = new java.io.File(m.filepath).getAbsoluteFile
-      new org.apache.hadoop.fs.Path(f.toURI).toUri.toString ->
-        ((f.getName, m.startTime.orNull, m.endTime.orNull))
+      new org.apache.hadoop.fs.Path(new java.io.File(m.filepath).getAbsoluteFile.toURI)
+        .toUri.toString -> metadataValues(m)
     }.toMap
     val tagOf = udf((p: String) => byPath.get(p))
 
     // group by ordered header, preserving first-appearance order so the
     // result's column order is file #1's order (pandas concat parity)
-    val grouped: Seq[(Seq[String], Seq[String])] = headers.distinct.map { h =>
-      (h, metas.zip(headers).collect { case (m, hh) if hh == h => m.filepath })
+    val parts = headers.distinct.map { h =>
+      val paths = metas.zip(headers).collect { case (m, hh) if hh == h => m.filepath }
+      val scan = csvReader(h).csv(paths: _*)
+      withMetadata(scan, tagOf(scan.metadataColumn("_metadata")("file_path")))
     }
-    // all-string schema: coercion below reproduces to_numeric(errors=coerce)
-    val withMeta = grouped
-      .map { case (h, paths) =>
-        val schema = StructType(h.map(c => StructField(c, StringType, nullable = true)))
-        val scan = csvReader().schema(schema).csv(paths: _*)
-        val tag = tagOf(scan.metadataColumn("_metadata")("file_path"))
-        FileMetadataColumns.zipWithIndex.foldLeft(scan) { case (acc, (c, i)) =>
-          acc.withColumn(c, tag(s"_${i + 1}"))
-        }
-      }
-      .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
-
-    val transformed = applyTransform(withMeta, tsColRaw)
-    assemble(Seq(transformed), metas, stats, alreadyUnioned = true, tsColRaw)
-  }
-
-  private def finishOne(raw: DataFrame, meta: FileMetadata): DataFrame = {
-    val tsColRaw = detectTimestampColumn(raw.columns.toSeq)
-    applyTransform(transformer.transform(raw, tsColRaw, meta), tsColRaw, skipTransformer = true)
-  }
-
-  private def applyTransform(
-      df: DataFrame,
-      tsColRaw: Option[String],
-      skipTransformer: Boolean = false
-  ): DataFrame = {
-    val base =
-      if (skipTransformer) df
-      else {
-        // inline DefaultDataTransformer semantics over the single scan;
-        // try_cast = pd.to_numeric(errors="coerce"): garbage -> null (plain
-        // cast THROWS under Spark 4 ANSI mode). Non-"." decimal separators
-        // (e.g. European "21,5") normalize before the cast (survey §7.4 #8).
-        def numeric(c: org.apache.spark.sql.Column) =
-          if (loading.decimal == ".") c.try_cast("double")
-          else regexp_replace(c,
-            java.util.regex.Pattern.quote(loading.decimal), ".").try_cast("double")
-        df.columns.foldLeft(df) { (acc, c) =>
-          if (tsColRaw.contains(c) || FileMetadataColumns.contains(c)) acc
-          else acc.withColumn(c, numeric(col(c)))
-        }
-      }
-    tsColRaw match {
-      case Some(tc) if base.schema(tc).dataType == StringType =>
-        // F1 strict parse with F2-style coalesce fallback over common formats
-        base.withColumn(tc, parseTimestamp(col(tc)))
-      case _ => base
-    }
+    assemble(parts, headers.head, metas, stats)
   }
 
   /** F1/F2: strict format first, then an ordered coalesce of common formats
@@ -348,26 +323,28 @@ class TimeSeriesLoader(
     coalesce(fallbacks.map(f => try_to_timestamp(trim(c), lit(f))): _*)
   }
 
+  /** The one finish step for both sources. `parts` are all-string frames
+    * already tagged with FileMetadataColumns; the timestamp column comes
+    * from the first header (O1), the transformer runs once on the union.
+    */
   private def assemble(
       parts: Seq[DataFrame],
+      header: Seq[String],
       metas: Seq[FileMetadata],
-      stats: Option[DiscoveryStats],
-      alreadyUnioned: Boolean = false,
-      tsColKnown: Option[String] = None
+      stats: Option[DiscoveryStats]
   ): LoadedSeries = {
-    val unioned =
-      if (alreadyUnioned) parts.head
-      else parts.reduce(_.unionByName(_)) // U1; schemas pre-validated equal
-
-    // O1: timestamp detection + global sort
-    val tsCol = tsColKnown.orElse(
-      unioned.columns.find(c =>
-        c.toLowerCase.contains("time") && !FileMetadataColumns.contains(c) &&
-          unioned.schema(c).dataType == TimestampType)
-    )
-    val sorted = (tsCol, sortByTimestamp) match {
-      case (Some(tc), true) => unioned.orderBy(col(tc))
-      case _ => unioned
+    val tsCol = detectTimestampColumn(header)
+    val transformed = transformer.transform(
+      parts.reduce(_.unionByName(_, allowMissingColumns = true)), tsCol, loading)
+    val parsed = tsCol match {
+      case Some(tc) if transformed.schema(tc).dataType == StringType =>
+        // F1 strict parse with F2-style coalesce fallback over common formats
+        transformed.withColumn(tc, parseTimestamp(col(tc)))
+      case _ => transformed
+    }
+    val sorted = tsCol match {
+      case Some(tc) if sortByTimestamp => parsed.orderBy(col(tc))
+      case _ => parsed
     }
 
     val renamed = applyNaming(sorted)

@@ -62,12 +62,11 @@ object Continuity {
     * extreme scale if the exact sort ever shows up in profiles.
     */
   def inferFrequencySeconds(df: DataFrame, tsCol: String, seriesCols: Seq[String] = Nil): Option[Long] = {
-    val d = withDiff(df, tsCol, seriesCols)
-    val row = d.filter(col("diff_us").isNotNull)
-      .agg(median(col("diff_us")).as("m"))
-      .head()
-    if (row.isNullAt(0)) None else Some((row.getDouble(0) / 1e6).toLong)
+    val row = withDiff(df, tsCol, seriesCols).agg(median(col("diff_us"))).head()
+    if (row.isNullAt(0)) None else Some(usToSeconds(row.getDouble(0)))
   }
+
+  private def usToSeconds(us: Double): Long = (us / 1e6).toLong
 
   def inferFrequency(df: DataFrame, tsCol: String): Option[String] =
     inferFrequencySeconds(df, tsCol).map(s => Offsets.toFreqString(Duration.ofSeconds(s)))
@@ -82,6 +81,15 @@ object Continuity {
       expected: Duration,
       minGap: Duration,
       seriesCols: Seq[String] = Nil
+  ): DataFrame = gapRows(withDiff(df, tsCol, seriesCols), tsCol, expected, minGap, seriesCols)
+
+  /** `gapsDf` over a frame that already carries `withDiff`'s columns. */
+  private def gapRows(
+      diffed: DataFrame,
+      tsCol: String,
+      expected: Duration,
+      minGap: Duration,
+      seriesCols: Seq[String]
   ): DataFrame = {
     val thresholdUs = (expected.getSeconds + minGap.getSeconds) * 1000000L
     val selectCols: Seq[Column] =
@@ -92,20 +100,23 @@ object Continuity {
         (floor(col("diff_us") / lit(expected.getSeconds * 1000000L)) - lit(1))
           .cast("long").as("expected_points")
       )
-    withDiff(df, tsCol, seriesCols)
+    diffed
       .filter(col("diff_us") > lit(thresholdUs))
       .select(selectCols: _*)
   }
 
-  /** Collected gap list (driver-sized). */
+  /** Collected gap list, in start order (driver-sized, so the sort runs on
+    * the driver, not as a distributed orderBy).
+    */
   def gaps(
       df: DataFrame,
       tsCol: String,
       expected: Duration,
       minGap: Duration
-  ): Seq[TimeSeriesGap] =
-    gapsDf(df, tsCol, expected, minGap)
-      .orderBy("gap_start")
+  ): Seq[TimeSeriesGap] = collectGaps(gapsDf(df, tsCol, expected, minGap))
+
+  private def collectGaps(gapRows: DataFrame): Seq[TimeSeriesGap] =
+    gapRows
       .collect()
       .map { r =>
         TimeSeriesGap(
@@ -116,9 +127,12 @@ object Continuity {
         )
       }
       .toVector
+      .sortBy(_.start)
 
   /** Full continuity report (reference analyze_time_series_continuity,
-    * load_file.py:2024-2125). One agg for span + one window scan for gaps.
+    * load_file.py:2024-2125). One diff frame feeds both actions: one agg for
+    * span, count and (when no frequency is given) the median diff, and one
+    * collect of the gap rows.
     */
   def analyze(
       df: DataFrame,
@@ -126,17 +140,19 @@ object Continuity {
       expectedFrequency: Option[Duration] = None,
       minGapSize: Duration = Duration.ofMinutes(1)
   ): ContinuityReport = {
-    val expected = expectedFrequency
-      .orElse(inferFrequencySeconds(df, tsCol).map(Duration.ofSeconds))
-      .getOrElse(Duration.ofSeconds(1))
-    val statsRow = df
-      .agg(min(col(tsCol)).as("mn"), max(col(tsCol)).as("mx"), count(lit(1)).as("n"))
+    val diffed = withDiff(df, tsCol)
+    val inferAgg = if (expectedFrequency.isEmpty) Seq(median(col("diff_us"))) else Nil
+    val statsRow = diffed
+      .agg(min(col(tsCol)), (Seq(max(col(tsCol)), count(lit(1))) ++ inferAgg): _*)
       .head()
+    val expected = expectedFrequency
+      .orElse(Option.unless(statsRow.isNullAt(3))(Duration.ofSeconds(usToSeconds(statsRow.getDouble(3)))))
+      .getOrElse(Duration.ofSeconds(1))
     val n = statsRow.getLong(2)
     val span =
       if (statsRow.isNullAt(0) || statsRow.isNullAt(1)) None
       else Some(Duration.ofMillis(statsRow.getTimestamp(1).getTime - statsRow.getTimestamp(0).getTime))
-    val gapList = gaps(df, tsCol, expected, minGapSize)
+    val gapList = collectGaps(gapRows(diffed, tsCol, expected, minGapSize, Nil))
     val gapTotal = gapList.foldLeft(Duration.ZERO)((acc, g) => acc.plus(g.duration))
     val coverage = span match {
       case Some(s) if s.toMillis > 0 =>

@@ -31,6 +31,10 @@ class LoaderSpec extends SparkSpec {
 
   private def tmpDir(): Path = Files.createTempDirectory("graft-loader-spec")
 
+  /** A directory's files as in-memory uploads: the same bytes, no file behind them. */
+  private def uploadsOf(dir: Path): Seq[(String, Array[Byte])] =
+    Files.list(dir).iterator().asScala.toSeq.map(f => (f.getFileName.toString, Files.readAllBytes(f)))
+
   test("full pipeline: discover -> validate -> load -> coerce -> sort -> clean names") {
     val dir = tmpDir()
     writeFixture(dir)
@@ -90,6 +94,9 @@ class LoaderSpec extends SparkSpec {
     val loader = new TimeSeriesLoader(spark,
       tsConfig = TimeSeriesConfig(strategy = ValidationStrategy.None_))
     assertThrows[DataLoadingException](loader.load(dir.toString))
+    // uploads go through the same header check
+    val e = intercept[DataLoadingException](loader.loadUploads(uploadsOf(dir)))
+    assert(e.getMessage.contains("Column mismatch in 01-01-2024 02_00_00 - 01-01-2024 03_00_00.csv"))
   }
 
   test("dtype mismatch across files raises (P5 pin :748-780: letters in a numeric column)") {
@@ -100,8 +107,10 @@ class LoaderSpec extends SparkSpec {
       "timestamp;v\n01/01/2024 01:00;abc\n01/01/2024 01:30;def\n")
     val loader = new TimeSeriesLoader(spark,
       tsConfig = TimeSeriesConfig(strategy = ValidationStrategy.None_))
-    val e = intercept[DataLoadingException](loader.load(dir.toString))
-    assert(e.getMessage.contains("Data type mismatch"))
+    for (load <- Seq(() => loader.load(dir.toString), () => loader.loadUploads(uploadsOf(dir)))) {
+      val e = intercept[DataLoadingException](load())
+      assert(e.getMessage.contains("Data type mismatch"))
+    }
   }
 
   test("delimiter variants ',' '\\t' '|' load identically (pin :782-805)") {
@@ -198,13 +207,15 @@ class LoaderSpec extends SparkSpec {
     val dir = tmpDir()
     Files.writeString(dir.resolve("01-01-2024 00_00_00 - 01-01-2024 01_00_00.csv"),
       "timestamp;v\n01/01/2024 00:00;21,5\n01/01/2024 00:30;1.234\n")
-    val loaded = new TimeSeriesLoader(spark,
+    val loader = new TimeSeriesLoader(spark,
       loading = graft.core.LoadingConfig(decimal = ","),
       tsConfig = graft.core.TimeSeriesConfig(strategy = graft.core.ValidationStrategy.None_))
-      .load(dir.toString)
-    val vs = loaded.df.orderBy("timestamp").collect()
-      .map(r => if (r.isNullAt(1)) None else Some(r.getDouble(1)))
-    assert(vs(0) == Some(21.5))
+    // the same bytes as uploads must give the same values
+    for (loaded <- Seq(loader.load(dir.toString), loader.loadUploads(uploadsOf(dir)))) {
+      val vs = loaded.df.orderBy("timestamp").collect()
+        .map(r => if (r.isNullAt(1)) None else Some(r.getDouble(1)))
+      assert(vs(0) == Some(21.5))
+    }
   }
 
   test("originalColumnNames reads the header only (S5)") {
@@ -239,11 +250,66 @@ class LoaderSpec extends SparkSpec {
       .withTimeSeriesConfig(graft.core.TimeSeriesConfig(
         strategy = graft.core.ValidationStrategy.None_))
       .withNaming(graft.core.ColumnNamingConfig(renameMap = Map("humidity" -> "hum")))
+      .withTransformer(new MarkingTransformer)
       .addHook(new OutlierRemovalHook(Seq("hum"), threshold = 100.0))
       .build()
       .load(dir.toString)
     assert(loaded.df.columns.contains("hum"))
     assert(loaded.df.count() == 4)
+    // the builder's transformer ran on the directory load, on top of the
+    // default coercion (hum is numeric, so the hook could run)
+    assert(loaded.df.filter(col("marked")).count() == 4)
+    assert(loaded.hookContext.contains("processing_stats"))
+  }
+
+  /** Default coercion plus a `marked` column; counts its calls and records
+    * whether the metadata columns were already on the frame it saw.
+    */
+  private class MarkingTransformer extends DataTransformer {
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    @volatile var sawMetadata = false
+    override def transform(df: org.apache.spark.sql.DataFrame, timestampColumn: Option[String],
+        loading: LoadingConfig) = {
+      calls.incrementAndGet()
+      sawMetadata = TimeSeriesLoader.FileMetadataColumns.forall(df.columns.contains)
+      new DefaultDataTransformer().transform(df, timestampColumn, loading)
+        .withColumn("marked", lit(true))
+    }
+  }
+
+  test("the transformer runs once per load, on the tagged whole frame, for a " +
+    "directory, a path list and uploads alike") {
+    val dir = tmpDir()
+    writeFixture(dir)
+    val noValidation = TimeSeriesConfig(strategy = ValidationStrategy.None_)
+    val paths = Files.list(dir).iterator().asScala.map(_.toString).toSeq
+    val loads = Seq[TimeSeriesLoader => LoadedSeries](
+      _.load(dir.toString), _.loadPaths(paths), _.loadUploads(uploadsOf(dir)))
+    for ((run, i) <- loads.zipWithIndex) {
+      val t = new MarkingTransformer
+      val loaded = run(new TimeSeriesLoader(spark, tsConfig = noValidation, transformer = t))
+      assert(t.calls.get() == 1, s"load #$i: transformer calls")
+      assert(t.sawMetadata, s"load #$i: metadata columns missing before the transformer")
+      assert(loaded.df.filter(col("marked")).count() == loaded.df.count(), s"load #$i")
+      assert(loaded.df.schema("timestamp").dataType == TimestampType, s"load #$i")
+    }
+  }
+
+  test("an explicit timestampColumn without 'time' in its name is reported, " +
+    "parsed and sorted on uploads as on a directory") {
+    val dir = tmpDir()
+    Files.writeString(dir.resolve("01-01-2024 00_00_00 - 01-01-2024 01_00_00.csv"),
+      "Datum;v\n01/01/2024 00:30;2\n01/01/2024 00:00;1\n")
+    Files.writeString(dir.resolve("01-01-2024 01_00_00 - 01-01-2024 02_00_00.csv"),
+      "Datum;v\n01/01/2024 01:00;3\n")
+    val loader = new TimeSeriesLoader(spark, loading = LoadingConfig(timestampColumn = Some("Datum")),
+      tsConfig = TimeSeriesConfig(strategy = ValidationStrategy.None_))
+    for (loaded <- Seq(loader.load(dir.toString), loader.loadUploads(uploadsOf(dir)))) {
+      assert(loaded.timestampColumn == Some("Datum"))
+      assert(loaded.df.select("Datum").collect().map(_.getTimestamp(0)).toSeq ==
+        Seq(ts("2024-01-01 00:00:00"), ts("2024-01-01 00:30:00"), ts("2024-01-01 01:00:00")))
+      assert(loaded.analyzeContinuity().totalPoints == 3)
+    }
   }
 
   test("TimeMetadataExtractor parses the default filename pattern (P3)") {

@@ -58,4 +58,29 @@ class ContinuitySpec extends SparkSpec {
     assert(gaps.length == 1)
     assert(gaps.head.getString(0) == "a")
   }
+
+  test("gap list is in start order with exact expected points, from a diff " +
+    "spread over several partitions (frequency inferred and given)") {
+    // minute series over 4 hours with 4 holes: (first missing minute, points missing)
+    val holes = Seq((20, 5), (70, 9), (130, 3), (200, 15))
+    val missing = holes.flatMap { case (m, k) => m until m + k }.toSet
+    val minute = (m: Int) => ts(f"2024-01-01 ${m / 60}%02d:${m % 60}%02d:00")
+    val df = (0 until 240).filterNot(missing).map(minute).toDF("ts").repartition(4)
+    // the chunked spine: each range chunk lands in a hash partition, so
+    // collect order is partition order, not time order
+    spark.conf.set("graft.rangeSeries.fastPathRows", "0")
+    spark.conf.set("graft.rangeSeries.fastPathBytes", "0")
+    try {
+      for (given <- Seq(None, Some(Duration.ofMinutes(1)))) {
+        val r = Continuity.analyze(df, "ts", given)
+        assert(r.inferredFrequency == Some("60s"))
+        assert(r.gaps.map(g => (g.start, g.expectedPoints)) ==
+          holes.map { case (m, k) => (minute(m - 1), k.toLong) }, s"expectedFrequency=$given")
+        assert(r.totalPoints == 240 - missing.size)
+      }
+    } finally {
+      spark.conf.unset("graft.rangeSeries.fastPathRows")
+      spark.conf.unset("graft.rangeSeries.fastPathBytes")
+    }
+  }
 }
