@@ -2476,8 +2476,9 @@ object Queries {
         // sums, counts, and an integer-division mean instead of round()
         val ev = t(s, dir, "events").select(col("user_id"), col("ts"),
           round(col("value") * 100).as("cents"), lit(1.0).as("one"))
-        Resample.resampleTimeSeriesPerSeries(ev, "ts", "1d", Seq("user_id"),
-            methodResample = Some("sum"), valueCols = Seq("cents", "one"))
+        Resample.resampleTimeSeries(ev, "ts", "1d",
+            methodResample = Some("sum"), valueCols = Seq("cents", "one"),
+            seriesCols = Seq("user_id"))
           .select(col("user_id"), col("ts"),
             col("cents").cast("long").as("sum_cents"),
             col("one").cast("long").as("n_points"),

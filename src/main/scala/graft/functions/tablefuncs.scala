@@ -26,9 +26,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * [[graft.ts.Resample.resampleTimeSeries]] the DataFrame API uses, and
   * splices that plan's analyzed tree in as the function's output (so SQL
   * and DataFrame callers share one implementation and one test surface).
-  * `resampleTimeSeries` computes its grid bounds eagerly, so the
-  * enclosing query's analysis runs one small min/max job — same behavior
-  * as the DataFrame path.
+  * `resampleTimeSeries` keeps its grid bounds in the plan instead of
+  * collecting them, so analysing the enclosing query runs no min/max job.
   */
 object tablefuncs {
 

@@ -50,7 +50,12 @@ final case class LoadedSeries(
       graft.core.Offsets.parse(minGapSize))
 
   /** Reference resample_time_series (load_file.py:2241-2360) as a method on
-    * the loaded corpus; original frame untouched.
+    * the loaded corpus, one global series; original frame untouched.
+    * Numeric columns are aggregated; the metadata columns (`source_file`,
+    * `file_start_time`, `file_end_time`) take the row nearest to each bucket.
+    * "ffill"/"bfill" fill every column, "interpolate" only the numeric ones.
+    * The grid bounds stay in the plan; only `includeAllGaps = false` collects
+    * them while building.
     */
   def resample(
       frequency: String,

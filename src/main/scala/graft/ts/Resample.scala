@@ -3,6 +3,7 @@ package graft.ts
 import graft.core.{Offsets, TimeSeriesGap}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.NumericType
 import java.sql.Timestamp
 import java.time.Duration
 
@@ -12,13 +13,16 @@ import java.time.Duration
   *   - tumbling resample = groupBy(window(ts, freq)) -> map-side partial
   *     aggregation, one hash shuffle, no sort;
   *   - regular right-closed bins (the resample_time_series path) = O(1)
-  *     arithmetic bucket per row — no edge array, no range join;
+  *     arithmetic bucket per row from the series start, which arrives by a
+  *     join against the bounds frame (one row per series; broadcast) — no
+  *     edge array, no range join, no driver round trip;
   *   - irregular custom edges = O(#edges) lookup on a broadcast sorted edge
   *     array (edges are config-sized by construction);
-  *   - target grids are generated ON EXECUTORS via sequence()+explode from a
-  *     tiny segment-bounds list — never a driver-side row loop;
-  *   - non-numeric "nearest" columns reuse AsOf.join (one sort shuffle)
-  *     instead of the reference's O(n*m) python scan.
+  *   - target grids are generated ON EXECUTORS via sequence()+explode over
+  *     that same bounds frame (or the driver's gap-excluding segment list),
+  *     never a driver-side row loop;
+  *   - non-numeric "nearest" columns reuse AsOf.join (one sort shuffle,
+  *     per series when keyed) instead of the reference's O(n*m) python scan.
   */
 object Resample {
 
@@ -90,7 +94,8 @@ object Resample {
     * include_lowest=True) semantics — intervals (b_i, b_{i+1}] with the first
     * closed at b_0; label = LEFT edge (reference load_file.py:2183-2185).
     * Broadcast sorted-edge array + higher-order filter: O(#edges) per row,
-    * zero shuffle. Use `regularBucket` when edges are evenly spaced.
+    * zero shuffle. Evenly spaced bins need no edges: `resampleTimeSeries`
+    * computes them arithmetically.
     */
   def bucketExpr(tsCol: String, edges: Seq[Timestamp]): Column = {
     require(edges.size >= 2, "need at least two bin edges")
@@ -105,73 +110,54 @@ object Resample {
       .otherwise(leftOpen)
   }
 
-  /** Right-closed REGULAR binning as O(1) arithmetic — the scale path for
-    * resample_time_series grids: ts in (start+(k-1)f, start+kf] -> label
-    * start+(k-1)f; ts == start -> start (include_lowest); outside
-    * [start,end] -> null.
-    */
-  def regularBucket(tsCol: String, start: Timestamp, end: Timestamp, freq: Duration): Column = {
-    val t = col(tsCol)
-    // microsecond integer arithmetic: grid points from sequence() carry
-    // sub-second precision, so second-truncated labels would never join
-    val f = freq.getSeconds * 1000000L
-    val s0 = lit(start)
-    val delta = unix_micros(t) - unix_micros(s0)
-    val k = ceil(delta.cast("double") / f.toDouble).cast("long")
-    val left = timestamp_micros(unix_micros(s0) + (k - 1) * f)
-    when(t < s0 || t > lit(end), lit(null).cast("timestamp"))
-      .when(t === s0, s0)
-      .otherwise(left)
-  }
+  private def isNumeric(df: DataFrame, c: String): Boolean =
+    df.schema(c).dataType.isInstanceOf[NumericType]
 
-  /** Aggregate a pre-bucketed frame: numeric columns per `method`+`skipna`,
-    * non-numeric columns by globally-nearest row to the bucket label (J1),
-    * original column order preserved (reference load_file.py:2151-2239).
-    * Expects a `__bucket` timestamp column; null buckets already filtered.
+  /** Aggregate a pre-bucketed frame per (`keys`, bucket): numeric columns per
+    * `method`+`skipna`, non-numeric columns by the row nearest to the bucket
+    * label within the same series (J1), original column order preserved
+    * (reference load_file.py:2151-2239). Expects a non-null `__bucket`
+    * timestamp column.
     */
   private def aggregateBuckets(
       bucketed: DataFrame,
       original: DataFrame,
       tsCol: String,
+      keys: Seq[String],
       method: Method,
       skipna: Boolean,
       sumAllNullZero: Boolean = false
   ): DataFrame = {
-    val dataCols = original.columns.filterNot(_ == tsCol).toSeq
-    val numeric = dataCols.filter { c =>
-      original.schema(c).dataType match {
-        case _: org.apache.spark.sql.types.NumericType => true
-        case _ => false
-      }
-    }
-    val nonNumeric = dataCols.diff(numeric)
+    val dataCols = original.columns.filterNot(c => c == tsCol || keys.contains(c)).toSeq
+    val (numeric, nonNumeric) = dataCols.partition(isNumeric(original, _))
+    val groups = (keys :+ "__bucket").map(col)
 
     val numAgg =
       if (numeric.nonEmpty) {
         val aggs = numeric.map(c => aggFor(method, c, tsCol, skipna, sumAllNullZero))
-        bucketed.groupBy(col("__bucket")).agg(aggs.head, aggs.tail: _*)
-      } else bucketed.select(col("__bucket")).distinct()
+        bucketed.groupBy(groups: _*).agg(aggs.head, aggs.tail: _*)
+      } else bucketed.select(groups: _*).distinct()
 
     val result =
       if (nonNumeric.isEmpty) numAgg
       else {
         val nearest = AsOf.join(
-          left = numAgg.select(col("__bucket")),
-          right = original.select((col(tsCol) +: nonNumeric.map(col)): _*),
+          left = numAgg.select(groups: _*),
+          right = original.select(((keys :+ tsCol) ++ nonNumeric).map(col): _*),
           leftTs = "__bucket",
           rightTs = tsCol,
           valueCols = nonNumeric,
+          keys = keys,
           direction = AsOf.Direction.Nearest,
           prefix = "__n_"
         )
         numAgg.join(
-          nearest.select((col("__bucket").as("__bucket2") +: nonNumeric.map(c =>
-            col(s"__n_$c").as(c))): _*),
-          col("__bucket") === col("__bucket2"),
+          nearest.select(groups ++ nonNumeric.map(c => col(s"__n_$c").as(c)): _*),
+          keys :+ "__bucket",
           "left"
-        ).drop("__bucket2")
+        )
       }
-    result.select((col("__bucket").as(tsCol) +: dataCols.map(col)): _*)
+    result.select((keys.map(col) :+ col("__bucket").as(tsCol)) ++ dataCols.map(col): _*)
   }
 
   /** A2 + J1: irregular-bin resample ("resample_with_dates", reference
@@ -188,37 +174,7 @@ object Resample {
     val bucketed = df
       .withColumn("__bucket", bucketExpr(tsCol, edges))
       .filter(col("__bucket").isNotNull)
-    aggregateBuckets(bucketed, df, tsCol, method, skipna, sumAllNullZero)
-  }
-
-  /** U3/F7: regular timestamp grid [start, end] step `freq`, expanded on
-    * executors via sequence + explode.
-    */
-  def grid(
-      spark: org.apache.spark.sql.SparkSession,
-      start: Timestamp,
-      end: Timestamp,
-      freq: Duration,
-      tsCol: String = "ts"
-  ): DataFrame =
-    segmentsGrid(spark, Seq((start, end)), freq, tsCol)
-
-  /** Grid over multiple [start,end] segments (gap-exclusion grids, reference
-    * load_file.py:2310-2329): the segment list is tiny and driver-side, the
-    * point EXPANSION is distributed.
-    */
-  def segmentsGrid(
-      spark: org.apache.spark.sql.SparkSession,
-      segments: Seq[(Timestamp, Timestamp)],
-      freq: Duration,
-      tsCol: String = "ts"
-  ): DataFrame = {
-    import spark.implicits._
-    val seg = segments.toDF("__s", "__e").repartition(math.max(1, segments.size))
-    seg
-      .select(explode(sequence(col("__s"), col("__e"),
-        expr(s"interval ${freq.getSeconds} second"))).as(tsCol))
-      .dropDuplicates(tsCol)
+    aggregateBuckets(bucketed, df, tsCol, Nil, method, skipna, sumAllNullZero)
   }
 
   /** Segment bounds excluding gap interiors. We implement the reference's
@@ -247,69 +203,14 @@ object Resample {
     segs.result()
   }
 
-  /** Per-series resample: the scale generalization of resampleTimeSeries.
-    * Grids generate PER KEY on executors (bounds via one hash agg, expansion
-    * via sequence+explode — the driver never sees a timestamp), buckets
-    * compute relative to each series' own start, alignment joins on
-    * (keys, bucket). Reference semantics per series, no global state.
-    */
-  def resampleTimeSeriesPerSeries(
-      df: DataFrame,
-      tsCol: String,
-      frequency: String,
-      seriesCols: Seq[String],
-      methodResample: Option[String] = None,
-      methodFill: Option[String] = None,
-      fillLimit: Option[Int] = None,
-      valueCols: Seq[String] = Nil
-  ): DataFrame = {
-    require(seriesCols.nonEmpty, "use resampleTimeSeries for a single global series")
-    val freq = Offsets.parse(frequency)
-    val fUs = freq.getSeconds * 1000000L
-    val vals =
-      if (valueCols.nonEmpty) valueCols
-      else df.columns.filterNot(c => c == tsCol || seriesCols.contains(c)).toSeq
-    val proj = df.select((seriesCols.map(col) :+ col(tsCol)) ++ vals.map(col): _*)
-
-    val bounds = proj.groupBy(seriesCols.map(col): _*)
-      .agg(min(col(tsCol)).as("__s"), max(col(tsCol)).as("__e"))
-
-    val grid = bounds.select((seriesCols.map(col) :+
-      explode(sequence(col("__s"), col("__e"),
-        expr(s"interval ${freq.getSeconds} second"))).as(tsCol)): _*)
-
-    val aligned = methodResample match {
-      case None =>
-        grid.join(proj, seriesCols :+ tsCol, "left")
-      case Some(m) =>
-        val withStart = proj.join(bounds.select((seriesCols.map(col) :+ col("__s")): _*),
-          seriesCols)
-        val t = col(tsCol)
-        val delta = unix_micros(t) - unix_micros(col("__s"))
-        val k = ceil(delta.cast("double") / fUs.toDouble).cast("long")
-        val label = timestamp_micros(unix_micros(col("__s")) + (k - 1) * fUs)
-        val bucketed = withStart
-          .withColumn("__bucket", when(t === col("__s"), col("__s")).otherwise(label))
-          .drop("__s")
-        val method = Method.parse(m)
-        val aggs = vals.map(c => aggFor(method, c, tsCol, skipna = true))
-        val agg = bucketed
-          .groupBy((seriesCols.map(col) :+ col("__bucket").as(tsCol)): _*)
-          .agg(aggs.head, aggs.tail: _*)
-        grid.join(agg, seriesCols :+ tsCol, "left")
-    }
-
-    methodFill match {
-      case Some("ffill") => Fill.ffill(aligned, tsCol, vals, fillLimit, seriesCols)
-      case Some("bfill") => Fill.bfill(aligned, tsCol, vals, fillLimit, seriesCols)
-      case Some("interpolate") => Fill.interpolateTime(aligned, tsCol, vals, fillLimit, seriesCols)
-      case _ => aligned
-    }
-  }
-
   /** Full resample_time_series parity (reference load_file.py:2241-2360):
     * build grid (optionally excluding big gaps) -> align or aggregate ->
-    * fill. All row-wise work distributed; driver holds only segment bounds.
+    * fill, over one global series or, with `seriesCols`, one series per key
+    * (each with its own grid and bucket origin). The min/max bounds are one
+    * frame that feeds both the grid and the bucket rule and stays in the
+    * plan; only gap exclusion (global-only) collects it, next to the
+    * continuity jobs it runs anyway. "interpolate" fills numeric columns
+    * only; non-numeric columns keep their aligned values.
     */
   def resampleTimeSeries(
       df: DataFrame,
@@ -320,42 +221,60 @@ object Resample {
       fillLimit: Option[Int] = None,
       includeAllGaps: Boolean = true,
       maxGapSize: Option[String] = None,
-      valueCols: Seq[String] = Nil
+      valueCols: Seq[String] = Nil,
+      seriesCols: Seq[String] = Nil
   ): DataFrame = {
-    val spark = df.sparkSession
+    require(includeAllGaps || seriesCols.isEmpty,
+      "includeAllGaps = false excludes gaps of one global series; it takes no seriesCols")
     val freq = Offsets.parse(frequency)
+    val keys = seriesCols.map(col)
     val vals =
       if (valueCols.nonEmpty) valueCols
-      else df.columns.filterNot(_ == tsCol).toSeq
-    val proj = df.select((col(tsCol) +: vals.map(col)): _*)
+      else df.columns.filterNot(c => c == tsCol || seriesCols.contains(c)).toSeq
+    val proj = df.select((keys :+ col(tsCol)) ++ vals.map(col): _*)
 
-    val bounds = proj.agg(min(col(tsCol)), max(col(tsCol))).head()
-    val (start, end) = (bounds.getTimestamp(0), bounds.getTimestamp(1))
-
+    val bounds = proj.groupBy(keys: _*)
+      .agg(min(col(tsCol)).as("__s"), max(col(tsCol)).as("__e"))
     val segments =
-      if (includeAllGaps) Seq((start, end))
+      if (includeAllGaps) bounds
       else {
-        val report = Continuity.analyze(proj, tsCol)
-        segmentsExcludingGaps(start, end, report.gaps, maxGapSize.map(Offsets.parse))
+        val b = bounds.head()
+        val gaps = Continuity.analyze(proj, tsCol).gaps
+        import df.sparkSession.implicits._
+        segmentsExcludingGaps(b.getTimestamp(0), b.getTimestamp(1), gaps,
+          maxGapSize.map(Offsets.parse)).toDF("__s", "__e")
       }
-    val g = segmentsGrid(spark, segments, freq, tsCol)
+    val grid = segments.select(keys :+ explode(sequence(col("__s"), col("__e"),
+      expr(s"interval ${freq.getSeconds} second"))).as(tsCol): _*)
 
     val aligned = methodResample match {
       case None =>
         // pure reindex: exact-timestamp alignment (reference 2332-2333)
-        g.join(proj, Seq(tsCol), "left")
+        grid.join(proj, seriesCols :+ tsCol, "left")
       case Some(m) =>
-        val bucketed = proj
-          .withColumn("__bucket", regularBucket(tsCol, start, end, freq))
+        // right-closed regular bins from the series start: ts in
+        // (s+(k-1)f, s+kf] -> s+(k-1)f, ts == s -> s (include_lowest), in
+        // microseconds because sequence() grid points keep sub-second precision
+        val fUs = freq.getSeconds * 1000000L
+        val t = col(tsCol)
+        val s = col("__s")
+        val k = ceil((unix_micros(t) - unix_micros(s)).cast("double") / fUs.toDouble).cast("long")
+        val bucketed = proj.join(bounds.drop("__e"), seriesCols)
+          .withColumn("__bucket",
+            when(t === s, s).otherwise(timestamp_micros(unix_micros(s) + (k - 1) * fUs)))
+          .drop("__s")
           .filter(col("__bucket").isNotNull)
-        val agg = aggregateBuckets(bucketed, proj, tsCol, Method.parse(m), skipna = true)
-        g.join(agg, Seq(tsCol), "left")
+        val agg = aggregateBuckets(bucketed, proj, tsCol, seriesCols, Method.parse(m),
+          skipna = true)
+        grid.join(agg, seriesCols :+ tsCol, "left")
     }
 
     methodFill match {
-      case Some("ffill") => Fill.ffill(aligned, tsCol, vals, fillLimit)
-      case Some("bfill") => Fill.bfill(aligned, tsCol, vals, fillLimit)
-      case Some("interpolate") => Fill.interpolateTime(aligned, tsCol, vals, fillLimit)
+      case Some("ffill") => Fill.ffill(aligned, tsCol, vals, fillLimit, seriesCols)
+      case Some("bfill") => Fill.bfill(aligned, tsCol, vals, fillLimit, seriesCols)
+      case Some("interpolate") =>
+        Fill.interpolateTime(aligned, tsCol, vals.filter(isNumeric(aligned, _)), fillLimit,
+          seriesCols)
       case _ => aligned
     }
   }

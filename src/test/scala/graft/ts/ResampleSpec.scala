@@ -128,7 +128,7 @@ class ResampleSpec extends SparkSpec {
     assert(row.getString(2) == "A") // nearest to bucket label 10:00 is the 10:00 row
   }
 
-  test("regularBucket keeps sub-second precision (regression: second-truncated " +
+  test("resampleTimeSeries buckets keep sub-second precision (regression: second-truncated " +
     "labels never equal-joined the microsecond grid)") {
     val df = Seq(
       (ts("2024-01-01 10:00:00.5"), 10.0),
@@ -168,19 +168,21 @@ class ResampleSpec extends SparkSpec {
     assert(out(1).getDouble(1) == 3.0)
   }
 
-  test("resampleTimeSeriesPerSeries: per-key grids, buckets relative to each series start") {
+  test("resampleTimeSeries with seriesCols: per-key grids, buckets relative to each " +
+    "series start, nearest non-numeric within its own series") {
     val df = Seq(
-      ("a", ts("2024-01-01 10:00:00"), 10.0),
-      ("a", ts("2024-01-01 10:20:00"), 20.0), // same bucket as 10:30 edge
-      ("a", ts("2024-01-01 11:00:00"), 30.0),
-      ("b", ts("2024-01-05 00:15:00"), 1.0), // entirely different range
-      ("b", ts("2024-01-05 00:45:00"), 3.0)
-    ).toDF("k", "ts", "v")
-    val out = Resample.resampleTimeSeriesPerSeries(df, "ts", "30min", Seq("k"),
-        methodResample = Some("mean"), methodFill = Some("ffill"))
+      ("a", ts("2024-01-01 10:00:00"), 10.0, "a00"),
+      ("a", ts("2024-01-01 10:20:00"), 20.0, "a20"), // same bucket as 10:30 edge
+      ("a", ts("2024-01-01 11:00:00"), 30.0, "a60"),
+      ("b", ts("2024-01-05 00:15:00"), 1.0, "b15"), // entirely different range
+      ("b", ts("2024-01-05 00:45:00"), 3.0, "b45"),
+      ("c", ts("2024-01-01 10:30:00"), 5.0, "c30") // on a's 10:30 label, other series
+    ).toDF("k", "ts", "v", "tag")
+    val out = Resample.resampleTimeSeries(df, "ts", "30min",
+        methodResample = Some("mean"), methodFill = Some("ffill"), seriesCols = Seq("k"))
       .orderBy("k", "ts").collect()
-    // a grid: 10:00, 10:30, 11:00; b grid: 00:15, 00:45
-    assert(out.length == 5)
+    // a grid: 10:00, 10:30, 11:00; b grid: 00:15, 00:45; c grid: 10:30
+    assert(out.length == 6)
     assert(out(0).getString(0) == "a" && out(0).getTimestamp(1) == ts("2024-01-01 10:00:00"))
     assert(out(0).getDouble(2) == 15.0) // (10+20)/2 in (10:00-eps,10:30]... include start
     assert(out(1).getDouble(2) == 30.0) // (10:30,11:00] -> 30.0
@@ -189,6 +191,57 @@ class ResampleSpec extends SparkSpec {
     // right-closed (00:15, 00:45] puts BOTH b rows in bucket 00:15 -> mean 2.0
     assert(out(3).getDouble(2) == 2.0)
     assert(out(4).getDouble(2) == 2.0) // empty 00:45 bucket ffilled
+    assert(out(5).getString(0) == "c" && out(5).getDouble(2) == 5.0)
+    // the a bucket at 10:30 takes a's 10:20 row, not c's row AT 10:30
+    assert(out.map(_.getString(3)).toSeq == Seq("a00", "a20", "a20", "b15", "b15", "c30"))
+    assertThrows[IllegalArgumentException](Resample.resampleTimeSeries(df, "ts", "30min",
+      includeAllGaps = false, seriesCols = Seq("k")))
+  }
+
+  test("building a global or per-series resample (mean + ffill) starts no Spark job") {
+    val df = Seq(
+      ("a", ts("2024-01-01 10:00:00"), 1.0),
+      ("a", ts("2024-01-01 11:10:00"), 2.0),
+      ("b", ts("2024-01-01 10:05:00"), 3.0)
+    ).toDF("k", "ts", "v")
+    val sc = spark.sparkContext
+    val tag = "graft.test.resampleBuild"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(tag) != null)) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(tag, "1")
+    try {
+      Resample.resampleTimeSeries(df.drop("k"), "ts", "30min",
+        methodResample = Some("mean"), methodFill = Some("ffill"))
+      Resample.resampleTimeSeries(df, "ts", "30min",
+        methodResample = Some("mean"), methodFill = Some("ffill"), seriesCols = Seq("k"))
+    } finally {
+      sc.setLocalProperty(tag, null)
+      org.apache.spark.ListenerBusBridge.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get == 0)
+  }
+
+  test("interpolate fills numeric columns only; string and timestamp columns keep " +
+    "their nearest values and types") {
+    val df = Seq(
+      (ts("2024-01-01 10:00:00"), 0.0, "p", ts("2024-01-01 00:00:00")),
+      (ts("2024-01-01 11:30:00"), 30.0, "q", ts("2024-01-01 01:00:00"))
+    ).toDF("ts", "value", "source_file", "file_start_time")
+    val resampled = Resample.resampleTimeSeries(df, "ts", "30min",
+      methodResample = Some("mean"), methodFill = Some("interpolate"))
+    assert(resampled.schema.map(_.dataType.typeName) ==
+      Seq("timestamp", "double", "string", "timestamp"))
+    val out = resampled.orderBy("ts").collect()
+    // buckets: 10:00 <- 10:00 row, (11:00, 11:30] -> 11:00 <- 11:30 row
+    assert(out.map(_.getDouble(1)).toSeq == Seq(0.0, 15.0, 30.0, 30.0))
+    assert(out.map(_.getString(2)).toSeq == Seq("p", null, "q", null))
+    assert(out.map(_.getTimestamp(3)).toSeq ==
+      Seq(ts("2024-01-01 00:00:00"), null, ts("2024-01-01 01:00:00"), null))
   }
 
   test("resampleTimeSeries with includeAllGaps=false skips big-gap interiors end-to-end") {
@@ -206,6 +259,15 @@ class ResampleSpec extends SparkSpec {
         includeAllGaps = false, maxGapSize = Some("12h"))
       .orderBy("ts").collect()
     assert(withSmall.length == 11) // 00..10 contiguous: 5h gap tolerated
+    // two excluded gaps sharing the 05:00 endpoint: disjoint segments
+    // [00..02], [08..10], so the grid needs no de-duplication
+    val shared = Seq(0, 1, 2, 5, 8, 9, 10)
+      .map(h => (ts(f"2024-01-01 $h%02d:00:00"), h.toDouble)).toDF("ts", "value")
+    val grid = Resample.resampleTimeSeries(shared, "ts", "1h",
+        includeAllGaps = false, maxGapSize = Some("2h"))
+      .collect().map(_.getTimestamp(0)).toSeq
+    assert(grid.distinct.size == grid.size)
+    assert(grid.map(_.toLocalDateTime.getHour).sorted == Seq(0, 1, 2, 8, 9, 10))
   }
 
   test("segmentsExcludingGaps removes only gaps above maxGapSize (documented semantics)") {
