@@ -66,7 +66,7 @@ object Fuzz {
 
   /** Spine-consumer inventory (round 13). Every non-diagnostic source file
     * that calls a [[graft.ts.RangeSeries]] global entry point
-    * (withGlobalRunning / withGlobalBounded) must register at least one
+    * (withRunning / withGlobalBounded) must register at least one
     * case here that drives its GLOBAL (unkeyed) path. FuzzSpec re-derives
     * the consumer file set from the source tree every test run and fails
     * when a new consumer ships without an entry — and runs every case
@@ -410,7 +410,7 @@ object Fuzz {
         // them around the builder (not the action) is sufficient
         s.conf.set("graft.rangeSeries.fastPathRows", gr.toString)
         s.conf.set("graft.rangeSeries.fastPathBytes", gb.toString)
-        try RangeSeries.withGlobalRunning(ev, col("ts"),
+        try RangeSeries.withRunning(ev, col("ts"),
             runnings = Seq(RangeSeries.Running("ff", col("v"))),
             lags = Seq(RangeSeries.Lagged("lg", col("v"))),
             reverses = Seq(RangeSeries.Running("bf", col("v"))),

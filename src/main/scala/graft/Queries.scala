@@ -2641,7 +2641,7 @@ object Queries {
         // both rank lists are corpus-sized, so the global row_numbers ride
         // the chunked spine instead of a single-task Window.orderBy
         // (descending score = negated key, doc_id tie-break)
-        val text = ts.RangeSeries.withGlobalRunning(
+        val text = ts.RangeSeries.withRunning(
             TextStats.bm25(t(s, dir, "documents"), "doc_id", "text",
               Seq("hash", "join", "spark", "window", "vector")),
             key = struct((-col("score_u")).as("k1"), col("doc_id").as("k2")),
@@ -2651,7 +2651,7 @@ object Queries {
           .select(col("doc_id"), col("r_text"))
         val q = emb.filter(col("vec_id") === 0)
           .select(transform(col("embedding"), x => x.cast("double")).as("qe"))
-        val vec = ts.RangeSeries.withGlobalRunning(
+        val vec = ts.RangeSeries.withRunning(
             emb.filter(col("vec_id") =!= 0)
               .select(col("vec_id").as("doc_id"),
                 transform(col("embedding"), x => x.cast("double")).as("e"))

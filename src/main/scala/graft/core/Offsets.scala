@@ -31,10 +31,26 @@ object Offsets {
     }
   }
 
-  /** Duration -> seconds string, the freq-inference fallback output format
-    * (reference load_file.py:2072-2074; pinned "3600s" by its tests).
+  /** Duration -> offset string: "{n}s" for whole seconds, the
+    * freq-inference fallback output format (reference load_file.py:2072-2074;
+    * pinned "3600s" by its tests); otherwise the coarsest exact "{n}ms",
+    * "{n}us" or "{n}ns", so `parse(toFreqString(d)) == d`.
     */
-  def toFreqString(d: Duration): String = s"${d.getSeconds}s"
+  def toFreqString(d: Duration): String =
+    if (d.getNano == 0) s"${d.getSeconds}s"
+    else if (d.getNano % 1000000 == 0) s"${d.toMillis}ms"
+    else if (d.getNano % 1000 == 0) s"${toMicros(d)}us"
+    else s"${d.toNanos}ns"
+
+  /** Whole microseconds in `d`, the engine's timestamp resolution. */
+  def toMicros(d: Duration): Long = d.getSeconds * 1000000L + d.getNano / 1000
+
+  /** [[toMicros]] of a frequency, which must be at least 1 us. */
+  def frequencyMicros(d: Duration): Long = {
+    val us = toMicros(d)
+    if (us <= 0) throw new ConfigValidationException(s"Frequency must be at least 1us, got $d")
+    us
+  }
 
   /** Duration -> Spark interval expression string, e.g. "INTERVAL 90 SECOND". */
   def toSparkInterval(d: Duration): String = s"INTERVAL ${d.getSeconds} SECOND"

@@ -65,7 +65,7 @@ object ZOrder {
     *
     * Scale shape: a plain `ntile()` here would global-sort the whole
     * corpus in ONE task; instead the global rank rides the
-    * [[graft.ts.RangeSeries.withGlobalRunning]] chunked spine (quantile
+    * [[graft.ts.RangeSeries.withRunning]] chunked spine (quantile
     * chunks on the z-value, per-chunk row_number + driver offsets) and
     * ntile's bucket function is replayed EXACTLY from (rank, N, buckets)
     * as literals: with q = N div b and rem = N mod b, the first `rem`
@@ -82,7 +82,7 @@ object ZOrder {
     val zed = df.withColumn("__z", interleave2(col(colA), col(colB), bits))
       .localCheckpoint(true)
     val n = zed.count()
-    val ranked = graft.ts.RangeSeries.withGlobalRunning(zed,
+    val ranked = graft.ts.RangeSeries.withRunning(zed,
       key = struct((col("__z") +: tieCols.map(col)): _*),
       runnings = Nil,
       rnCol = Some("__rn"),

@@ -1,7 +1,6 @@
 package graft.ts
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** As-of / nearest time joins (J1 in the survey; reference
@@ -49,7 +48,6 @@ object AsOf {
       tolerance: Option[Long] = None, // max |lt - rt| in seconds
       prefix: String = "asof_"
   ): DataFrame = {
-    val spark = left.sparkSession
     val t = "__t"
     val side = "__side" // 0 = right(data), 1 = left(probe)
 
@@ -79,17 +77,15 @@ object AsOf {
     // recomputing the aggregate per row — O(n^2), measured 515s on a 100k-row
     // timeline — while running frames are incremental O(n).
     //
-    // With keys the windows hash-partition and parallelize. With NO keys
-    // (one global timeline) a global window would single-task the sort, so
-    // the same algebra runs through RangeSeries' two-pass range-partitioned
-    // form in ONE exchange: chunks bucket on t alone (tied instants never
-    // split), the backward match is a running last over (2*t_us + side) asc
-    // — side 0/1 keeps it order-preserving and overflow-free until year
-    // ~148000 — and the forward match is a reverse request over
-    // (2*t_us - side) asc, so a right row at the same instant counts as
-    // "at or after" the probe for forward exactly as it counts as "at or
-    // before" for backward.
-    val global = keys.isEmpty
+    // Both matches are ONE RangeSeries call: the backward match is a running
+    // last over (2*t_us + side) asc — side 0/1 keeps it order-preserving and
+    // overflow-free until year ~148000 — and the forward match is a reverse
+    // request over (2*t_us - side) asc, so a right row at the same instant
+    // counts as "at or after" the probe for forward exactly as it counts as
+    // "at or before" for backward. With keys the windows hash-partition on
+    // them; with NO keys (one global timeline) RangeSeries runs its two-pass
+    // range-partitioned form in ONE exchange, chunks bucketed on t alone
+    // (tied instants never split).
     val kBase = unix_micros(col(t)) * 2
     val kBack = kBase + col(side)
     val kFwdAsc = kBase - col(side)
@@ -108,56 +104,32 @@ object AsOf {
       when(col(side) === 0,
         struct((col("__r_ts").as("ts") +:
           valueCols.map(c => col(s"__r_$c").as(s"v_$c"))): _*)))
-    def unpack(in: DataFrame, from: String, pfx: String): DataFrame =
-      valueCols.foldLeft(
-        in.withColumn(s"${pfx}ts", col(s"$from.ts"))
-      ) { (acc, c) =>
-        acc.withColumn(s"$pfx$c", col(s"$from.v_$c"))
-      }.drop(from)
+    def unpack(in: DataFrame): DataFrame =
+      valueCols.foldLeft(in.withColumn("__m_ts", col("__m_pack.ts"))) { (acc, c) =>
+        acc.withColumn(s"__m_$c", col(s"__m_pack.v_$c"))
+      }.drop("__m_pack")
 
-    def runGlobal(in: DataFrame, backPfx: Option[String], fwdPfx: Option[String]): DataFrame =
-      RangeSeries.withGlobalRunning(in, kBack,
+    def run(backPfx: Option[String], fwdPfx: Option[String]): DataFrame =
+      RangeSeries.withRunning(packed, kBack,
         runnings = backPfx.toSeq.map(p => RangeSeries.Running(s"${p}pack", col(pack))),
         reverses = fwdPfx.toSeq.map(p => RangeSeries.Running(s"${p}pack", col(pack))),
         bucketKey = Some(kBase),
-        revKey = Some(kFwdAsc))
+        revKey = Some(kFwdAsc),
+        keys = keys)
 
-    val part = Window.partitionBy(keys.map(col): _*)
-    val wBack = part.orderBy(col(t).asc, col(side).asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wFwd = part.orderBy(col(t).desc, col(side).asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    def runKeyed(in: DataFrame, w: org.apache.spark.sql.expressions.WindowSpec,
-        pfx: String): DataFrame =
-      in.withColumn(s"${pfx}pack", last(col(pack), ignoreNulls = true).over(w))
-
-    val withMatches = direction match {
-      case Direction.Backward =>
-        unpack(
-          if (global) runGlobal(packed, Some("__m_"), None)
-          else runKeyed(packed, wBack, "__m_"),
-          "__m_pack", "__m_")
-      case Direction.Forward =>
-        unpack(
-          if (global) runGlobal(packed, None, Some("__m_"))
-          else runKeyed(packed, wFwd, "__m_"),
-          "__m_pack", "__m_")
+    val withMatches = unpack(direction match {
+      case Direction.Backward => run(Some("__m_"), None)
+      case Direction.Forward => run(None, Some("__m_"))
       case Direction.Nearest =>
-        val withBoth =
-          if (global) runGlobal(packed, Some("__b_"), Some("__f_"))
-          else runKeyed(runKeyed(packed, wBack, "__b_"), wFwd, "__f_")
         val bDist = abs(unix_micros(col(t)) - unix_micros(col("__b_pack.ts")))
         val fDist = abs(unix_micros(col("__f_pack.ts")) - unix_micros(col(t)))
         // earlier (backward) wins ties, matching the reference argmin
         val useBack = col("__b_pack.ts").isNotNull &&
           (col("__f_pack.ts").isNull || bDist <= fDist)
-        unpack(
-          withBoth
-            .withColumn("__m_pack",
-              when(useBack, col("__b_pack")).otherwise(col("__f_pack")))
-            .drop("__b_pack", "__f_pack"),
-          "__m_pack", "__m_")
-    }
+        run(Some("__b_"), Some("__f_"))
+          .withColumn("__m_pack", when(useBack, col("__b_pack")).otherwise(col("__f_pack")))
+          .drop("__b_pack", "__f_pack")
+    })
 
     val tolFiltered = tolerance match {
       case Some(sec) =>
@@ -173,7 +145,6 @@ object AsOf {
       case None => withMatches
     }
 
-    val _ = spark
     tolFiltered
       .filter(col(side) === 1)
       .select((leftCols.map(c => col(s"__l_$c").as(c)) ++

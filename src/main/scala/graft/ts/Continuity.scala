@@ -2,7 +2,6 @@ package graft.ts
 
 import graft.core.{Offsets, TimeSeriesGap}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import java.time.Duration
 
@@ -10,14 +9,14 @@ import java.time.Duration
   * consecutive-diff gap scan (W1/W2), span/coverage stats (A5), frequency
   * inference (A6).
   *
-  * Scale design: the diff is a lag window. With `seriesCols` given, the window
-  * partitions by series key -> fully parallel, one hash shuffle. Without keys
-  * (single global series, the reference's model) Spark must use a single
-  * ordered partition for the window — correct, but the scan/filter before it
-  * still run distributed and only (ts) columns flow into the sort, so the
-  * narrow projection keeps the single-partition stage small even at large row
-  * counts. Gap LISTS are driver-sized by definition (one entry per hole), so
-  * collecting them is metadata-plane, not data-plane.
+  * Scale design: the diff is one RangeSeries lag. With `seriesCols` given,
+  * the window partitions by series key -> fully parallel, one hash shuffle.
+  * Without keys (single global series, the reference's model) it runs
+  * RangeSeries' two-pass range-partitioned form instead of a single-task
+  * global sort. Gap LISTS are driver-sized by definition (one entry per
+  * hole), so collecting them is metadata-plane, not data-plane. Thresholds,
+  * expected points and frequencies are in microseconds, so sub-second
+  * cadences work.
   */
 object Continuity {
 
@@ -30,28 +29,20 @@ object Continuity {
       totalPoints: Long
   )
 
-  /** Lagged diff in seconds (W1, reference load_file.py:2080). With no
-    * seriesCols the lag runs through RangeSeries' two-pass range-partitioned
-    * form — a global window would single-task the whole timeline's sort.
+  /** Adds `diffCol`, the microseconds since the previous row (W1, reference
+    * load_file.py:2080), and keeps that row's `__prev_ts`; per series with
+    * `seriesCols`. One RangeSeries lag: a keyed window, or the two-pass
+    * form for one global series.
     */
   def withDiff(
       df: DataFrame,
       tsCol: String,
       seriesCols: Seq[String] = Nil,
       diffCol: String = "diff_us"
-  ): DataFrame = {
-    val lagged =
-      if (seriesCols.nonEmpty) {
-        val w = Window.partitionBy(seriesCols.map(col): _*).orderBy(col(tsCol))
-        df.withColumn("__prev_ts", lag(col(tsCol), 1).over(w))
-      } else
-        RangeSeries.withGlobalRunning(df, unix_micros(col(tsCol)), Nil,
-          lags = Seq(RangeSeries.Lagged("__prev_ts", col(tsCol))))
-    lagged.withColumn(
-      diffCol,
-      unix_micros(col(tsCol)) - unix_micros(col("__prev_ts"))
-    )
-  }
+  ): DataFrame =
+    RangeSeries.withRunning(df, unix_micros(col(tsCol)), Nil,
+        lags = Seq(RangeSeries.Lagged("__prev_ts", col(tsCol))), keys = seriesCols)
+      .withColumn(diffCol, unix_micros(col(tsCol)) - unix_micros(col("__prev_ts")))
 
   /** Median consecutive diff, in whole seconds (A6 fallback semantics,
     * reference load_file.py:2064-2074 — emits "{n}s"; int() TRUNCATES, so a
@@ -67,6 +58,16 @@ object Continuity {
   }
 
   private def usToSeconds(us: Double): Long = (us / 1e6).toLong
+
+  /** The frequency a median diff of `us` infers: truncated to whole seconds
+    * at 1 s or more (as above), kept in microseconds below; None when zero.
+    */
+  private def medianFrequency(us: Double): Option[Duration] = {
+    val d =
+      if (us >= 1e6) Duration.ofSeconds(usToSeconds(us))
+      else Duration.ofNanos(us.toLong * 1000L)
+    Option.unless(d.isZero)(d)
+  }
 
   def inferFrequency(df: DataFrame, tsCol: String): Option[String] =
     inferFrequencySeconds(df, tsCol).map(s => Offsets.toFreqString(Duration.ofSeconds(s)))
@@ -91,13 +92,14 @@ object Continuity {
       minGap: Duration,
       seriesCols: Seq[String]
   ): DataFrame = {
-    val thresholdUs = (expected.getSeconds + minGap.getSeconds) * 1000000L
+    val expectedUs = Offsets.frequencyMicros(expected)
+    val thresholdUs = expectedUs + Offsets.toMicros(minGap)
     val selectCols: Seq[Column] =
       seriesCols.map(col) ++ Seq(
         col("__prev_ts").as("gap_start"),
         col(tsCol).as("gap_end"),
         col("diff_us").as("duration_us"),
-        (floor(col("diff_us") / lit(expected.getSeconds * 1000000L)) - lit(1))
+        (floor(col("diff_us") / lit(expectedUs)) - lit(1))
           .cast("long").as("expected_points")
       )
     diffed
@@ -146,7 +148,7 @@ object Continuity {
       .agg(min(col(tsCol)), (Seq(max(col(tsCol)), count(lit(1))) ++ inferAgg): _*)
       .head()
     val expected = expectedFrequency
-      .orElse(Option.unless(statsRow.isNullAt(3))(Duration.ofSeconds(usToSeconds(statsRow.getDouble(3)))))
+      .orElse(Option.unless(statsRow.isNullAt(3))(statsRow.getDouble(3)).flatMap(medianFrequency))
       .getOrElse(Duration.ofSeconds(1))
     val n = statsRow.getLong(2)
     val span =

@@ -88,7 +88,7 @@ object Downsample {
     * Scale shape: frame indexing and PAA ride ONE keyed window exchange
     * (row_number) + a groupBy on the same partitioning; the exact global
     * rank over the FRAME table (rows/frame of the input — corpus-sized,
-    * NOT vocab-bounded) runs on the [[RangeSeries.withGlobalRunning]]
+    * NOT vocab-bounded) runs on the [[RangeSeries.withRunning]]
     * chunked spine: quantile chunks on paa_u, per-chunk row_number, one
     * O(#chunks) driver offset pass — never a single-task global window
     * (plan-pinned by the PLANS.json `window_unpartitioned` counter).
@@ -132,7 +132,7 @@ object Downsample {
     // spine's three internal jobs share one materialization.
     val framesCk = frames.localCheckpoint(true)
     val nf = framesCk.count()
-    val ranked = RangeSeries.withGlobalRunning(framesCk,
+    val ranked = RangeSeries.withRunning(framesCk,
       key = struct((col("paa_u") +: keyCols :+ col("widx")): _*),
       runnings = Nil,
       rnCol = Some("__r"),

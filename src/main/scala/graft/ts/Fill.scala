@@ -1,28 +1,25 @@
 package graft.ts
 
-import org.apache.spark.sql.{DataFrame}
-import org.apache.spark.sql.expressions.{Window, WindowSpec}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import RangeSeries.Running
 
 /** Null-fill operators over an ordered time axis (W4/W5 in the survey;
   * reference load_file.py:2341-2351).
   *
   * Pandas `fillna(method=..., limit=n)` fills at most n consecutive nulls
   * counted from the last valid value — implemented here with an anchor trick:
-  * the running `max` of row_number-at-non-null rows marks the last valid row,
+  * the running last row number at non-null rows marks the last valid row,
   * and distance from that anchor bounds the fill.
   *
-  * Scale design: everything is window algebra over one (partitionBy(keys)
-  * orderBy ts) sort — a single shuffle shared by all fill columns, no UDFs.
+  * Scale design: everything is RangeSeries window algebra, one body for
+  * keyed and global series — with `seriesCols` one (partitionBy(keys)
+  * orderBy ts) sort shared by all fill columns, without them the two-pass
+  * range-partitioned form instead of a single-task global sort. No UDFs.
+  * `limit` adds a row-number pass over the same materialized order key, so
+  * keyed, it reuses the first pass's sort.
   */
 object Fill {
-
-  private def baseWindow(seriesCols: Seq[String], tsCol: String, desc: Boolean): WindowSpec = {
-    val w =
-      if (seriesCols.nonEmpty) Window.partitionBy(seriesCols.map(col): _*)
-      else Window.partitionBy()
-    if (desc) w.orderBy(col(tsCol).desc) else w.orderBy(col(tsCol).asc)
-  }
 
   /** Forward-fill `valueCols` (reference fillna(method="ffill", limit=n)). */
   def ffill(
@@ -44,14 +41,37 @@ object Fill {
       seriesCols: Seq[String] = Nil
   ): DataFrame = fillDirectional(df, tsCol, valueCols, limit, seriesCols, desc = true)
 
-  /** Orderable long key for a global series ordering; negated for desc. */
-  private[ts] def globalKey(df: DataFrame, tsCol: String, desc: Boolean): org.apache.spark.sql.Column = {
+  /** Orderable long key for a series ordering; negated for desc. */
+  private[ts] def orderKey(df: DataFrame, tsCol: String, desc: Boolean): Column = {
     val base = df.schema(tsCol).dataType match {
       case org.apache.spark.sql.types.TimestampType => unix_micros(col(tsCol))
       case _ => col(tsCol).cast("long")
     }
     if (desc) -base else base
   }
+
+  private val ok = "__ok"
+  private val grn = "__grn"
+
+  /** `df` with the order key materialized as `__ok` and, for `limit`, the
+    * series row number `__grn` — both passes then order on one column.
+    */
+  private def numbered(df: DataFrame, tsCol: String, desc: Boolean, limit: Option[Int],
+      seriesCols: Seq[String]): DataFrame = {
+    val keyed = df.withColumn(ok, orderKey(df, tsCol, desc))
+    if (limit.isEmpty) keyed
+    else RangeSeries.withRunning(keyed, col(ok), Nil, rnCol = Some(grn), keys = seriesCols)
+  }
+
+  /** The running anchor request: last series row number where `c` is non-null. */
+  private def anchor(c: String): Running = Running(s"__an_$c", when(col(c).isNotNull, col(grn)))
+
+  /** `filled`; with `limit`, only on non-null rows and on nulls at most
+    * `limit` rows past the anchor — null beyond, and before the first valid
+    * value, where the anchor is null.
+    */
+  private def bounded(c: String, limit: Option[Int], filled: Column): Column =
+    limit.fold(filled)(n => when(col(c).isNotNull || col(grn) - col(s"__an_$c") <= n, filled))
 
   private def fillDirectional(
       df: DataFrame,
@@ -61,69 +81,13 @@ object Fill {
       seriesCols: Seq[String],
       desc: Boolean
   ): DataFrame = {
-    // no keys = ONE global series: a global window would single-task the
-    // sort; use the two-pass range-partitioned form instead (RangeSeries)
-    if (seriesCols.isEmpty)
-      return fillGlobal(df, tsCol, valueCols, limit, desc)
-    val w = baseWindow(seriesCols, tsCol, desc)
-    val running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    limit match {
-      case None =>
-        valueCols.foldLeft(df) { (acc, c) =>
-          acc.withColumn(c, last(col(c), ignoreNulls = true).over(running))
-        }
-      case Some(n) =>
-        val withRn = df.withColumn("__rn", row_number().over(w))
-        val filled = valueCols.foldLeft(withRn) { (acc, c) =>
-          val anchor =
-            max(when(col(c).isNotNull, col("__rn"))).over(running)
-          val fillVal = last(col(c), ignoreNulls = true).over(running)
-          acc.withColumn(
-            c,
-            when(col(c).isNotNull, col(c))
-              .when(anchor.isNotNull && (col("__rn") - anchor) <= n, fillVal)
-              .otherwise(col(c))
-          )
-        }
-        filled.drop("__rn")
-    }
-  }
-
-  /** Global-series fill via RangeSeries two-pass windows. Same semantics as
-    * the keyed path; ties on the timestamp get an arbitrary-but-consistent
-    * order (as they already did under the single global sort).
-    */
-  private def fillGlobal(
-      df: DataFrame,
-      tsCol: String,
-      valueCols: Seq[String],
-      limit: Option[Int],
-      desc: Boolean
-  ): DataFrame = {
-    val key = globalKey(df, tsCol, desc)
-    limit match {
-      case None =>
-        RangeSeries.withGlobalRunning(df, key,
-          valueCols.map(c => RangeSeries.Running(c, col(c))))
-      case Some(n) =>
-        // pass 1: global row number; pass 2: running fill value + running
-        // global position of the last non-null (the anchor). Two range
-        // shuffles — still beats one single-task global sort at scale.
-        val grn = "__grn"
-        val withRn = RangeSeries.withGlobalRunning(df, key, Nil, rnCol = Some(grn))
-        val reqs = valueCols.flatMap { c =>
-          Seq(RangeSeries.Running(s"__fv_$c", col(c)),
-            RangeSeries.Running(s"__an_$c", when(col(c).isNotNull, col(grn))))
-        }
-        val filled = RangeSeries.withGlobalRunning(withRn, key, reqs)
-        valueCols.foldLeft(filled) { (acc, c) =>
-          acc.withColumn(c,
-            when(col(c).isNotNull, col(c))
-              .when(col(s"__an_$c").isNotNull && (col(grn) - col(s"__an_$c")) <= n,
-                col(s"__fv_$c"))
-              .otherwise(col(c)))
-        }.drop(valueCols.flatMap(c => Seq(s"__fv_$c", s"__an_$c")) :+ grn: _*)
-    }
+    val reqs = valueCols.flatMap(c =>
+      Running(s"__fv_$c", col(c)) +: limit.map(_ => anchor(c)).toSeq)
+    val filled = RangeSeries.withRunning(numbered(df, tsCol, desc, limit, seriesCols),
+      col(ok), reqs, keys = seriesCols)
+    valueCols.foldLeft(filled) { (acc, c) =>
+      acc.withColumn(c, bounded(c, limit, col(s"__fv_$c")))
+    }.drop(valueCols.flatMap(c => Seq(s"__fv_$c", s"__an_$c")) :+ grn :+ ok: _*)
   }
 
   /** Time-weighted linear interpolation (W5; reference
@@ -132,7 +96,11 @@ object Fill {
     * For a null at time t between valid neighbors (pv@pt, nv@nt):
     *   pv + (nv - pv) * (t - pt) / (nt - pt)
     * Pandas edges: leading nulls stay null; trailing nulls carry the last
-    * valid value; `limit` bounds consecutive filled nulls forward.
+    * valid value; `limit` bounds consecutive filled nulls forward. Both
+    * neighbor directions ride one RangeSeries call: backward neighbors as
+    * running requests, forward neighbors as reverse requests (a running
+    * frame over the descending order — [currentRow, unboundedFollowing]
+    * frames re-evaluate per row, O(n^2)).
     */
   def interpolateTime(
       df: DataFrame,
@@ -141,94 +109,26 @@ object Fill {
       limit: Option[Int] = None,
       seriesCols: Seq[String] = Nil
   ): DataFrame = {
-    if (seriesCols.isEmpty)
-      return interpolateGlobal(df, tsCol, valueCols, limit)
-    val wAsc = baseWindow(seriesCols, tsCol, desc = false)
-    val back = wAsc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // forward neighbor via a RUNNING window over descending order:
-    // [currentRow, unboundedFollowing] frames are O(n^2) in Spark (re-eval
-    // per row); the reversed running frame is incremental O(n)
-    val fwd = baseWindow(seriesCols, tsCol, desc = true)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val t = (unix_micros(col(tsCol)).cast("double") / 1e6)
+    val t = unix_micros(col(tsCol)).cast("double") / 1e6
+    def neighbors(side: String, c: String) =
+      Seq(Running(s"__${side}v_$c", col(c).cast("double")),
+        Running(s"__${side}t_$c", when(col(c).isNotNull, t)))
+    val f = RangeSeries.withRunning(numbered(df, tsCol, desc = false, limit, seriesCols),
+      col(ok),
+      runnings = valueCols.flatMap(c => neighbors("p", c) ++ limit.map(_ => anchor(c))),
+      reverses = valueCols.flatMap(neighbors("n", _)),
+      keys = seriesCols)
 
-    val withRn = df.withColumn("__rn", row_number().over(wAsc))
-    val out = valueCols.foldLeft(withRn) { (acc, c) =>
+    val out = valueCols.foldLeft(f) { (acc, c) =>
       val v = col(c).cast("double")
-      val validTs = when(col(c).isNotNull, t)
-      val pv = last(v, ignoreNulls = true).over(back)
-      val pt = last(validTs, ignoreNulls = true).over(back)
-      val nv = last(v, ignoreNulls = true).over(fwd)
-      val nt = last(validTs, ignoreNulls = true).over(fwd)
+      val Seq(pv, pt, nv, nt) = Seq("pv", "pt", "nv", "nt").map(h => col(s"__${h}_$c"))
       val interp = when(col(c).isNotNull, v)
         .when(pv.isNull, lit(null).cast("double")) // leading nulls stay null
         .when(nv.isNull, pv) // trailing nulls: carry last valid
         .otherwise(pv + (nv - pv) * (t - pt) / (nt - pt))
-      limit match {
-        case None => acc.withColumn(c, interp)
-        case Some(n) =>
-          val anchor = max(when(col(c).isNotNull, col("__rn"))).over(back)
-          acc.withColumn(
-            c,
-            when(col(c).isNotNull, v)
-              .when(anchor.isNotNull && (col("__rn") - anchor) <= n, interp)
-              .otherwise(col(c).cast("double"))
-          )
-      }
+      acc.withColumn(c, bounded(c, limit, interp))
     }
-    out.drop("__rn")
-  }
-
-  /** Global-series time interpolation: both neighbor directions in ONE
-    * range-partitioned exchange (forward neighbors ride RangeSeries'
-    * reverse requests), plus one extra pass for the row number when `limit`
-    * is set — instead of a single-task global sort.
-    */
-  private def interpolateGlobal(
-      df: DataFrame,
-      tsCol: String,
-      valueCols: Seq[String],
-      limit: Option[Int]
-  ): DataFrame = {
-    val kAsc = globalKey(df, tsCol, desc = false)
-    val t = (unix_micros(col(tsCol)).cast("double") / 1e6)
-    val grn = "__grn"
-
-    val base = limit match {
-      case Some(_) => RangeSeries.withGlobalRunning(df, kAsc, Nil, rnCol = Some(grn))
-      case None => df
-    }
-    val backReqs = valueCols.flatMap { c =>
-      Seq(RangeSeries.Running(s"__pv_$c", col(c).cast("double")),
-        RangeSeries.Running(s"__pt_$c", when(col(c).isNotNull, t))) ++
-        (if (limit.isDefined)
-           Seq(RangeSeries.Running(s"__an_$c", when(col(c).isNotNull, col(grn))))
-         else Nil)
-    }
-    val fwdReqs = valueCols.flatMap { c =>
-      Seq(RangeSeries.Running(s"__nv_$c", col(c).cast("double")),
-        RangeSeries.Running(s"__nt_$c", when(col(c).isNotNull, t)))
-    }
-    val f = RangeSeries.withGlobalRunning(base, kAsc, backReqs, reverses = fwdReqs)
-
-    val out = valueCols.foldLeft(f) { (acc, c) =>
-      val v = col(c).cast("double")
-      val interp = when(col(c).isNotNull, v)
-        .when(col(s"__pv_$c").isNull, lit(null).cast("double"))
-        .when(col(s"__nv_$c").isNull, col(s"__pv_$c"))
-        .otherwise(col(s"__pv_$c") + (col(s"__nv_$c") - col(s"__pv_$c")) *
-          (t - col(s"__pt_$c")) / (col(s"__nt_$c") - col(s"__pt_$c")))
-      limit match {
-        case None => acc.withColumn(c, interp)
-        case Some(n) =>
-          acc.withColumn(c,
-            when(col(c).isNotNull, v)
-              .when(col(s"__an_$c").isNotNull && (col(grn) - col(s"__an_$c")) <= n, interp)
-              .otherwise(v))
-      }
-    }
-    val helpers = valueCols.flatMap(c =>
-      Seq(s"__pv_$c", s"__pt_$c", s"__nv_$c", s"__nt_$c", s"__an_$c")) :+ grn
-    out.drop(helpers: _*)
+    out.drop(valueCols.flatMap(c =>
+      Seq("pv", "pt", "nv", "nt", "an").map(h => s"__${h}_$c")) :+ grn :+ ok: _*)
   }
 }

@@ -1,17 +1,22 @@
 package graft.ts
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
-/** Scale-safe window algebra for a SINGLE global series (no partition keys).
+/** Scale-safe window algebra for ordered series: running last-non-null,
+  * lag(1), "first non-null at or after" and row number, keyed or global.
   *
-  * `Window.partitionBy()` puts the whole series in ONE task ("WindowExec: No
-  * Partition Defined" — the single-task sort that kills a 100 TB timeline).
-  * Keyed series don't need this file: their windows hash-partition and
-  * parallelize naturally.
+  * KEYED series (`keys` non-empty) are the easy case: the windows
+  * hash-partition on the keys and parallelize naturally, so the requests
+  * become one keyed window per ordering — no gate, no job at construction.
   *
-  * The classic two-pass fix implemented here:
+  * A SINGLE global series (no keys) is the hard one: `Window.partitionBy()`
+  * puts the whole series in ONE task ("WindowExec: No Partition Defined" —
+  * the single-task sort that kills a 100 TB timeline).
+  *
+  * The classic two-pass fix implemented here for it:
   *   1. bucket rows into time-ordered chunks (quantile boundaries computed
   *      once, baked into the plan), `repartition` on the chunk id — each
   *      chunk its own task; per-chunk running aggregates via an ordinary
@@ -29,12 +34,12 @@ import org.apache.spark.sql.functions._
 object RangeSeries {
 
   /** A running last-non-null request: `out` column = last non-null value of
-    * `in` at or before the current row in the global `key` ordering.
+    * `in` at or before the current row in the series' `key` ordering.
     */
   final case class Running(out: String, in: Column)
 
   /** A lag(1) request: `out` = value of `in` on the immediately preceding row
-    * in the global `key` ordering (null for the very first row).
+    * in the series' `key` ordering (null for the series' first row).
     */
   final case class Lagged(out: String, in: Column)
 
@@ -119,9 +124,33 @@ object RangeSeries {
     else size(filter(typedLit(bs), b => col(bk) > b))
   }
 
-  /** Two-pass global-ordering window computation.
+  /** The window columns of one request set, in request order, as ONE map:
+    * a single `withColumns` puts every window expression in one projection,
+    * so the planner builds one window per ordering. A `withColumn` fold
+    * over an ordering EXPRESSION interleaves its `_w` projections and
+    * splits the windows one per column (a sort each).
+    */
+  private def windowColumns(
+      runnings: Seq[Running],
+      lags: Seq[Lagged],
+      reverses: Seq[Running],
+      rn: Option[String],
+      w: WindowSpec,
+      wRev: WindowSpec
+  ): ListMap[String, Column] = {
+    def upToCurrent(s: WindowSpec) =
+      s.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    ListMap(
+      runnings.map(r => r.out -> last(r.in, ignoreNulls = true).over(upToCurrent(w))) ++
+        lags.map(l => l.out -> lag(l.in, 1).over(w)) ++
+        reverses.map(r => r.out -> last(r.in, ignoreNulls = true).over(upToCurrent(wRev))) ++
+        rn.map(_ -> row_number().over(w)): _*)
+  }
+
+  /** Running/lag/reverse/row-number windows over keyed series or, two-pass,
+    * over ONE global series.
     *
-    * @param key      monotone sort key for the GLOBAL ordering (ascending).
+    * @param key      monotone sort key for the series ordering (ascending).
     *                 Encode compound orderings into one orderable expression
     *                 (e.g. `unix_micros(ts) * 2 + side`); descending orderings
     *                 negate the key.
@@ -131,7 +160,7 @@ object RangeSeries {
     *                 ordered ascending by `revKey` (default `key`). Runs as a
     *                 descending in-chunk window + suffix carry — same
     *                 exchange, no second shuffle.
-    * @param rnCol    if set, adds a GLOBAL 1-based row number column (by `key`)
+    * @param rnCol    if set, adds the series' 1-based row number (by `key`)
     * @param bucketKey chunk-assignment key, default `key`. Pass a COARSER
     *                 expression (e.g. the timestamp without a tie-break term)
     *                 when `key` and `revKey` break ties differently: rows with
@@ -164,8 +193,12 @@ object RangeSeries {
     *                 conf), and conf = 0 still disables the fast path
     *                 outright, so PlanSnapshot keeps pinning the scale
     *                 shape. Values identical on both paths, as always.
+    * @param keys     series key columns. Non-empty: the windows partition by
+    *                 them and order on `key` / `revKey` themselves — no
+    *                 gate, no chunking, no job at construction;
+    *                 `bucketKey`, `knownRows` and `fastRowsCap` are unused.
     */
-  def withGlobalRunning(
+  def withRunning(
       df: DataFrame,
       key: Column,
       runnings: Seq[Running],
@@ -175,8 +208,14 @@ object RangeSeries {
       bucketKey: Option[Column] = None,
       revKey: Option[Column] = None,
       knownRows: Option[Long] = None,
-      fastRowsCap: Option[Long] = None
+      fastRowsCap: Option[Long] = None,
+      keys: Seq[String] = Nil
   ): DataFrame = {
+    if (keys.nonEmpty) {
+      val part = Window.partitionBy(keys.map(col): _*)
+      return df.withColumns(windowColumns(runnings, lags, reverses, rnCol,
+        part.orderBy(key), part.orderBy(revKey.getOrElse(key).desc)))
+    }
     val k = "__rs_k"
     val rk = "__rs_rk"
     val bk = "__rs_bk"
@@ -240,26 +279,12 @@ object RangeSeries {
       else keyed
         .withColumn(pid, bucket)
         .repartition(math.max(n, 1), col(pid))
-    val w = Window.partitionBy(col(pid)).orderBy(col(k))
-    val wr = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // reverse = running over DESCENDING revKey: covers rows at or after the
     // current one in ascending revKey order; same pid partitioning => the
     // planner adds an in-partition sort, NOT another exchange
-    val wRev = Window.partitionBy(col(pid)).orderBy(col(rk).desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    val local0 = runnings.foldLeft(ranged) { (acc, r) =>
-      acc.withColumn(r.out, last(r.in, ignoreNulls = true).over(wr))
-    }
-    val local1 = lags.foldLeft(local0) { (acc, l) =>
-      acc.withColumn(l.out, lag(l.in, 1).over(w))
-    }
-    val local2 = reverses.foldLeft(local1) { (acc, r) =>
-      acc.withColumn(r.out, last(r.in, ignoreNulls = true).over(wRev))
-    }
-    val local =
-      if (needFwdWindow) local2.withColumn(lrn, row_number().over(w))
-      else local2
+    val part = Window.partitionBy(col(pid))
+    val local = ranged.withColumns(windowColumns(runnings, lags, reverses,
+      Option.when(needFwdWindow)(lrn), part.orderBy(col(k)), part.orderBy(col(rk).desc)))
 
     // single-chunk fast path: every carry is null and the row offset is 0,
     // so patching is identity — return the local window result directly.
@@ -363,12 +388,12 @@ object RangeSeries {
   final case class Bounded(out: String, agg: Column)
 
   /** Bounded trailing ROWS frames over a SINGLE global series — the
-    * companion to [[withGlobalRunning]] for `ROWS BETWEEN W-1 PRECEDING
+    * companion to [[withRunning]] for `ROWS BETWEEN W-1 PRECEDING
     * AND CURRENT ROW` shapes (rolling means/sums/mins — the
     * [[Smooth]]-family frames, unkeyed).
     *
     * Ghost-overlap two-pass: rows chunk exactly as in
-    * [[withGlobalRunning]] (deterministic quantile buckets); each chunk's
+    * [[withRunning]] (deterministic quantile buckets); each chunk's
     * last `window−1` rows are REPLICATED into the next chunk as ghosts,
     * so every row's trailing frame is complete inside its own partition;
     * ghosts compute, then drop. Exact only when every chunk holds at
@@ -400,14 +425,14 @@ object RangeSeries {
       .withColumn(k, key)
       .withColumn(bk, bucketKey.getOrElse(key).cast("double"))
     val fast = fastPathRows(df)
-    // gates as in withGlobalRunning: byte gate (zero jobs) then row gate
+    // gates as in withRunning: byte gate (zero jobs) then row gate
     // (checkpoint + count); either skips the quantile AND chunk-count
     // jobs and goes straight to the single-task window — the same exact
     // path thin inputs already take
     val tiny = statsTiny(keyedBase)
     val keyed = if (tiny) keyedBase else keyedBase.localCheckpoint(true)
     val n = numParts(df)
-    // as in withGlobalRunning: fast == 0 keeps n <= 1 on the spine route
+    // as in withRunning: fast == 0 keeps n <= 1 on the spine route
     val singleChunk = tiny || (fast > 0 && (n <= 1 || keyed.count() <= fast))
     val bounds: Array[Double] =
       if (singleChunk) Array.empty

@@ -226,7 +226,7 @@ object Resample {
   ): DataFrame = {
     require(includeAllGaps || seriesCols.isEmpty,
       "includeAllGaps = false excludes gaps of one global series; it takes no seriesCols")
-    val freq = Offsets.parse(frequency)
+    val fUs = Offsets.frequencyMicros(Offsets.parse(frequency))
     val keys = seriesCols.map(col)
     val vals =
       if (valueCols.nonEmpty) valueCols
@@ -245,7 +245,7 @@ object Resample {
           maxGapSize.map(Offsets.parse)).toDF("__s", "__e")
       }
     val grid = segments.select(keys :+ explode(sequence(col("__s"), col("__e"),
-      expr(s"interval ${freq.getSeconds} second"))).as(tsCol): _*)
+      expr(s"interval $fUs microseconds"))).as(tsCol): _*)
 
     val aligned = methodResample match {
       case None =>
@@ -255,7 +255,6 @@ object Resample {
         // right-closed regular bins from the series start: ts in
         // (s+(k-1)f, s+kf] -> s+(k-1)f, ts == s -> s (include_lowest), in
         // microseconds because sequence() grid points keep sub-second precision
-        val fUs = freq.getSeconds * 1000000L
         val t = col(tsCol)
         val s = col("__s")
         val k = ceil((unix_micros(t) - unix_micros(s)).cast("double") / fUs.toDouble).cast("long")

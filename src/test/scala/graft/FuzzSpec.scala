@@ -402,7 +402,7 @@ class FuzzSpec extends SparkSpec {
     assert(java.nio.file.Files.isDirectory(root),
       s"test must run from the repo root (cwd=${System.getProperty("user.dir")})")
     val pat = java.util.regex.Pattern.compile(
-      "RangeSeries\\.withGlobal(Running|Bounded)")
+      "RangeSeries\\.with(Running|GlobalBounded)")
     val walk = java.nio.file.Files.walk(root)
     val consumers =
       try {

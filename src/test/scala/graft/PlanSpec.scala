@@ -32,6 +32,25 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("keyed bfill(limit) plans one shuffle and one window sort; keyed " +
+    "interpolateTime(limit) one shuffle and a sort per direction") {
+    def shufflesAndSorts(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
+      val root = df.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      (root.collect { case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }.size,
+        root.collect { case s: org.apache.spark.sql.execution.SortExec => s }.size)
+    }
+    // the row-number pass and the fill pass order on one materialized key,
+    // so the second keyed window reuses the first one's sort
+    assert(shufflesAndSorts(
+      Fill.bfill(series, "ts", Seq("v"), limit = Some(1), seriesCols = Seq("k"))) == ((1, 1)))
+    assert(shufflesAndSorts(
+      Fill.interpolateTime(series, "ts", Seq("v"), limit = Some(1), seriesCols = Seq("k"))) ==
+      ((1, 2)))
+  }
+
   test("parquet filter pushdown and column pruning reach the scan") {
     val dir = java.nio.file.Files.createTempDirectory("graft-plan").toString
     Seq((1L, "x", 10.0), (2L, "y", 20.0)).toDF("id", "s", "v")

@@ -37,4 +37,12 @@ class OffsetsSpec extends AnyFunSuite {
     assert(Offsets.toFreqString(Duration.ofHours(1)) == "3600s")
     assert(Offsets.toFreqString(Duration.ofSeconds(90)) == "90s")
   }
+
+  test("toFreqString prints sub-second durations exactly; parse reads them back") {
+    assert(Offsets.toFreqString(Duration.ofMillis(500)) == "500ms")
+    assert(Offsets.toFreqString(Duration.ofNanos(1500000)) == "1500us")
+    assert(Offsets.toFreqString(Duration.ofMillis(1500)) == "1500ms")
+    Seq(Duration.ofHours(1), Duration.ofMillis(500), Duration.ofNanos(2500),
+      Duration.ofNanos(7)).foreach(d => assert(Offsets.parse(Offsets.toFreqString(d)) == d))
+  }
 }

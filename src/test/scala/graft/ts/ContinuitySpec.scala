@@ -83,4 +83,24 @@ class ContinuitySpec extends SparkSpec {
       spark.conf.unset("graft.rangeSeries.fastPathBytes")
     }
   }
+
+  test("a 2 Hz series with a 2-minute hole: sub-second frequency inferred " +
+    "and given, gap in microseconds; a zero frequency is rejected") {
+    // 0.0 s .. 59.5 s, then 179.5 s .. 239.0 s
+    val base = ts("2024-01-01 00:00:00").getTime
+    val twoHz = ((0 until 120) ++ (359 until 479))
+      .map(i => new java.sql.Timestamp(base + i * 500L)).toDF("ts")
+    for (given <- Seq(None, Some(Duration.ofMillis(500)))) {
+      val r = Continuity.analyze(twoHz, "ts", given)
+      assert(r.inferredFrequency == Some("500ms"), s"expectedFrequency=$given")
+      assert(r.gaps.size == 1)
+      assert(r.gaps.head.start == new java.sql.Timestamp(base + 119 * 500L))
+      assert(r.gaps.head.duration == Duration.ofMinutes(2))
+      assert(r.gaps.head.expectedPoints == 239) // 120 s / 0.5 s - 1
+      assert(r.totalPoints == 240)
+      assert(math.abs(r.coveragePercent - 100.0 * (239 - 120) / 239) < 1e-9)
+    }
+    assertThrows[graft.core.ConfigValidationException](
+      Continuity.analyze(twoHz, "ts", Some(Duration.ZERO)))
+  }
 }

@@ -51,9 +51,9 @@ class FastPathParitySpec extends SparkSpec with BeforeAndAfterAll {
   private def canon(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
-  test("withGlobalRunning: fast path == chunked spine (running/lag/reverse/rn)") {
+  test("withRunning: fast path == chunked spine (running/lag/reverse/rn)") {
     def run(): Seq[String] = canon(
-      RangeSeries.withGlobalRunning(
+      RangeSeries.withRunning(
         series, col("k"),
         runnings = Seq(RangeSeries.Running("ff", col("v"))),
         lags = Seq(RangeSeries.Lagged("lg", col("v"))),
@@ -76,10 +76,10 @@ class FastPathParitySpec extends SparkSpec with BeforeAndAfterAll {
     assert(spine.size == 5000 && fast == spine)
   }
 
-  test("withGlobalRunning fast path plans ONE SinglePartition exchange " +
+  test("withRunning fast path plans ONE SinglePartition exchange " +
     "and nothing else; the spine above the threshold stays partitioned") {
     def planOf(rows: Long) = withThreshold(rows) {
-      RangeSeries.withGlobalRunning(series, col("k"),
+      RangeSeries.withRunning(series, col("k"),
         runnings = Seq(RangeSeries.Running("ff", col("v"))), rnCol = Some("rn"))
         .queryExecution.executedPlan.toString
     }
@@ -98,7 +98,7 @@ class FastPathParitySpec extends SparkSpec with BeforeAndAfterAll {
   test("empty input survives the fast path") {
     val empty = Seq.empty[(Long, Option[Long])].toDF("k", "v")
     val out = withThreshold(1000000)(
-      RangeSeries.withGlobalRunning(empty, col("k"),
+      RangeSeries.withRunning(empty, col("k"),
         runnings = Seq(RangeSeries.Running("ff", col("v"))), rnCol = Some("rn")))
     assert(out.columns.toSeq == Seq("k", "v", "ff", "rn") && out.count() == 0)
   }

@@ -82,10 +82,7 @@ class RangeSeriesSpec extends SparkSpec
     assertNoGlobalWindow(got)
   }
 
-  test("global time interpolation matches the keyed path run with a constant key") {
-    val keyed = bigSeries.limit(20000).withColumn("k", lit(1))
-    val expected = Fill.interpolateTime(keyed, "ts", Seq("v"), seriesCols = Seq("k")).drop("k")
-    val got = Fill.interpolateTime(keyed.drop("k"), "ts", Seq("v"))
+  private def assertClose(got: DataFrame, expected: DataFrame): Unit = {
     val e = values(expected)
     val g = values(got)
     assert(g.size == e.size)
@@ -96,7 +93,53 @@ class RangeSeriesSpec extends SparkSpec
         case (a, b) => assert(a == b, s"at $gt: $a vs $b")
       }
     }
+  }
+
+  // the first 20k rows split between two keys that interleave in time
+  private lazy val twoKeys =
+    bigSeries.limit(20000).withColumn("k", (unix_micros(col("ts")) / 1000000L) % 2)
+
+  test("global time interpolation matches the keyed path, with one constant key " +
+    "and with two interleaved keys under limit = 1") {
+    val keyed = bigSeries.limit(20000).withColumn("k", lit(1))
+    val got = Fill.interpolateTime(keyed.drop("k"), "ts", Seq("v"))
+    assertClose(got, Fill.interpolateTime(keyed, "ts", Seq("v"), seriesCols = Seq("k")).drop("k"))
     assertNoGlobalWindow(got)
+    val both = Fill.interpolateTime(twoKeys, "ts", Seq("v"), limit = Some(1), seriesCols = Seq("k"))
+    Seq(0L, 1L).foreach { k =>
+      assertClose(both.filter(col("k") === k).drop("k"),
+        Fill.interpolateTime(twoKeys.filter(col("k") === k).drop("k"), "ts", Seq("v"),
+          limit = Some(1)))
+    }
+    val unlimited = Fill.interpolateTime(twoKeys, "ts", Seq("v"), seriesCols = Seq("k"))
+    assert(both.filter(col("v").isNull).count() > unlimited.filter(col("v").isNull).count(),
+      "limit = 1 must leave runs of two or more nulls partly unfilled")
+  }
+
+  test("keyed ffill and interpolation with limit, as-of nearest and withDiff " +
+    "start no Spark job to build, with both gates off") {
+    val sc = spark.sparkContext
+    val tag = "graft.test.keyedBuild"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(tag) != null)) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(tag, "1")
+    try {
+      Fill.ffill(twoKeys, "ts", Seq("v"), limit = Some(2), seriesCols = Seq("k"))
+      Fill.interpolateTime(twoKeys, "ts", Seq("v"), limit = Some(2), seriesCols = Seq("k"))
+      AsOf.join(twoKeys.select(col("k"), col("ts").as("lt")),
+        twoKeys.select(col("k"), col("ts").as("rt"), col("v")), "lt", "rt", Seq("v"),
+        keys = Seq("k"), direction = AsOf.Direction.Nearest)
+      Continuity.withDiff(twoKeys, "ts", Seq("k"))
+    } finally {
+      sc.setLocalProperty(tag, null)
+      org.apache.spark.ListenerBusBridge.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get == 0)
   }
 
   test("global withDiff (lag) matches the single-window form, including chunk-first rows") {

@@ -283,4 +283,24 @@ class ResampleSpec extends SparkSpec {
       (ts("2024-01-01 00:00:00"), ts("2024-01-01 02:00:00")),
       (ts("2024-01-01 04:00:00"), ts("2024-01-01 08:00:00"))))
   }
+
+  test("a 500ms resample of a 2 Hz series with a 2-minute hole: sub-second " +
+    "grid step and bucket width; a zero frequency is rejected") {
+    // value i at i * 0.5 s for i in 0..119 and 359..478
+    val base = ts("2024-01-01 00:00:00").getTime
+    val twoHz = ((0 until 120) ++ (359 until 479))
+      .map(i => (new java.sql.Timestamp(base + i * 500L), i.toDouble)).toDF("ts", "v")
+    val out = Resample.resampleTimeSeries(twoHz, "ts", "500ms", Some("mean"))
+      .orderBy("ts").collect()
+    assert(out.length == 479) // 0.0 s .. 239.0 s every 0.5 s
+    assert(out.zipWithIndex.forall { case (r, i) =>
+      r.getTimestamp(0).getTime == base + i * 500L })
+    // right-closed: i lands in slot i - 1, except the start labels itself
+    assert(out(0).getDouble(1) == 0.5)
+    assert(out(1).getDouble(1) == 2.0)
+    assert(out(358).getDouble(1) == 359.0)
+    assert(out.count(r => !r.isNullAt(1)) == 239)
+    assertThrows[ConfigValidationException](
+      Resample.resampleTimeSeries(twoHz, "ts", "0s", Some("mean")))
+  }
 }
