@@ -2,9 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.time.format.DateTimeFormatter
-import java.time.{Instant, ZoneOffset}
+import java.time.{Duration, Instant, ZoneOffset}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -92,7 +92,7 @@ object Fuzz {
           timestamp_micros(unix_micros(col("ts")) + 17000001L).as("grid_ts"))
         graft.ts.AsOf.join(grid, ev.select(col("ts"), col("v")), "grid_ts",
             "ts", Seq("v"), direction = graft.ts.AsOf.Direction.Backward,
-            tolerance = Some(60))
+            tolerance = Some(Duration.ofSeconds(60)))
           .select(col("grid_ts"), col("asof_v"), col("asof_ts"))
       }),
       "graft/ts/Fill.scala#global-ffill-limit" -> ((s, dir) =>
@@ -228,7 +228,7 @@ object Fuzz {
           AsOf.join(grid, ev, "grid_ts", "ts", Seq("value"),
               direction = if (kind == 0) AsOf.Direction.Backward
                           else AsOf.Direction.Forward,
-              tolerance = Some(tolSec), prefix = "asof_")
+              tolerance = Some(Duration.ofSeconds(tolSec)), prefix = "asof_")
             .select(col("grid_ts"), col("asof_value"),
               col("asof_ts").as("matched_ts"))
             .orderBy("grid_ts")

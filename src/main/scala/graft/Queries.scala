@@ -3757,7 +3757,8 @@ object Queries {
         val grid = bounds.select(
           explode(sequence(col("s"), col("e"), expr("interval 6 hours"))).as("grid_ts"))
         AsOf.join(grid, ev, "grid_ts", "ts", Seq("value"),
-            direction = AsOf.Direction.Backward, tolerance = Some(1800L),
+            direction = AsOf.Direction.Backward,
+            tolerance = Some(java.time.Duration.ofMinutes(30)),
             prefix = "asof_")
           .select(col("grid_ts"),
             round(col("asof_value"), 4).as("last_value"),

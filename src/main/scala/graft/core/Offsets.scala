@@ -38,7 +38,7 @@ object Offsets {
     */
   def toFreqString(d: Duration): String =
     if (d.getNano == 0) s"${d.getSeconds}s"
-    else if (d.getNano % 1000000 == 0) s"${d.toMillis}ms"
+    else if (d.getNano % 1000000 == 0) s"${toMicros(d) / 1000}ms"
     else if (d.getNano % 1000 == 0) s"${toMicros(d)}us"
     else s"${d.toNanos}ns"
 
@@ -52,6 +52,10 @@ object Offsets {
     us
   }
 
-  /** Duration -> Spark interval expression string, e.g. "INTERVAL 90 SECOND". */
-  def toSparkInterval(d: Duration): String = s"INTERVAL ${d.getSeconds} SECOND"
+  /** Duration -> Spark interval string in whole microseconds, e.g.
+    * "INTERVAL 1500000 MICROSECONDS": the one rendering every `window`,
+    * `session_window`, `withWatermark` and interval `expr` takes, so no
+    * caller truncates a sub-second duration.
+    */
+  def toSparkInterval(d: Duration): String = s"INTERVAL ${toMicros(d)} MICROSECONDS"
 }

@@ -18,8 +18,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *
   * Arguments (all literals): table/view name, timestamp column, frequency
   * offset string ('15m', '1h', '1d'...), then optional resample method
-  * ('mean','sum','min','max','first','last' — omit or NULL for pure
-  * reindex) and optional fill method ('ffill','bfill','interpolate').
+  * ('mean','sum','first','last' — omit or NULL for pure reindex) and
+  * optional fill method ('ffill','bfill','interpolate').
   *
   * Mechanics: the builder runs at analysis time — it resolves the named
   * table through the session catalog, applies the SAME

@@ -3,6 +3,7 @@ package graft.load
 import graft.core.LoadingConfig
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** Extension points (reference ts_extensions.py:14-75 + registry
   * load_file.py:2362-2418). These are whole-DataFrame strategy hooks, not
@@ -39,10 +40,9 @@ class DefaultDataTransformer extends DataTransformer {
       (if (loading.decimal == ".") c
        else regexp_replace(c, java.util.regex.Pattern.quote(loading.decimal), "."))
         .try_cast("double")
-    df.columns.foldLeft(df) { (acc, c) =>
-      if (timestampColumn.contains(c) || TimeSeriesLoader.FileMetadataColumns.contains(c)) acc
-      else acc.withColumn(c, numeric(col(c)))
-    }
+    df.withColumns(ListMap(df.columns.toSeq
+      .filterNot(c => timestampColumn.contains(c) || TimeSeriesLoader.FileMetadataColumns.contains(c))
+      .map(c => c -> numeric(col(c))): _*))
   }
 }
 

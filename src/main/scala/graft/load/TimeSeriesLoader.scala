@@ -3,11 +3,11 @@ package graft.load
 import graft.core._
 import graft.meta._
 import graft.validate.{FileValidator, TimeSeriesValidator}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Path, Paths}
-import java.time.Duration
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
 /** Loaded-corpus result (reference FileDataFrame.get_dataframe +
@@ -103,10 +103,10 @@ object TimeSeriesLoader {
     (new java.io.File(m.filepath).getName, m.startTime.orNull, m.endTime.orNull)
 
   /** Adds FileMetadataColumns from a struct whose `_1.._3` follow their order. */
-  private def withMetadata(df: DataFrame, values: org.apache.spark.sql.Column): DataFrame =
-    FileMetadataColumns.zipWithIndex.foldLeft(df) { case (acc, (c, i)) =>
-      acc.withColumn(c, values(s"_${i + 1}"))
-    }
+  private def withMetadata(df: DataFrame, values: Column): DataFrame =
+    df.withColumns(ListMap(FileMetadataColumns.zipWithIndex.map { case (c, i) =>
+      c -> values(s"_${i + 1}")
+    }: _*))
 }
 
 class TimeSeriesLoader(
@@ -120,8 +120,7 @@ class TimeSeriesLoader(
     contentValidator: Option[FileValidator] = None,
     transformer: DataTransformer = new DefaultDataTransformer(),
     hooks: Seq[PostProcessingHook] = Nil,
-    sortByTimestamp: Boolean = true,
-    enforceStructure: Boolean = true
+    sortByTimestamp: Boolean = true
 ) {
   import TimeSeriesLoader._
   private val errors = new ErrorCollector
@@ -200,8 +199,8 @@ class TimeSeriesLoader(
   /** A source's header and first data lines, split on the delimiter and trimmed. */
   private type Sample = (Seq[String], Vector[Array[String]])
 
-  /** Data lines `enforceHeaders` needs per source. */
-  private def probeRows: Int = if (enforceStructure) 10 else 0
+  /** Data lines `enforceHeaders` samples per source. */
+  private val probeRows = 10
 
   private def sample(name: String, lines: Iterator[String], rows: Int): Sample = {
     val sep = java.util.regex.Pattern.quote(loading.delimiter)
@@ -229,25 +228,23 @@ class TimeSeriesLoader(
   private def enforceHeaders(metas: Seq[FileMetadata], samples: Seq[Sample]): Seq[Seq[String]] = {
     val headers = samples.map(_._1)
     val ref = headers.head
-    if (enforceStructure) {
-      val refNumeric = ref.zip(numericColumns(samples.head._2, ref.size)).toMap
-      metas.tail.zip(samples.tail).foreach { case (m, (h, rows)) =>
-        if (h.toSet != ref.toSet) {
-          val msg = s"Column mismatch in ${m.filepath}: expected ${ref.mkString(",")} got ${h.mkString(",")}"
-          errors.add(ProcessingError(msg, ErrorSeverity.Error, "DataLoadingError", Some(m.filepath)))
-          throw new DataLoadingException(msg)
-        }
-        // compare BY NAME (not position): reordered files align by name at
-        // read time, so only a column flipping numeric<->non-numeric under
-        // its own name is the reference's "Data type mismatch"
-        h.zip(numericColumns(rows, h.size)).foreach { case (cname, tn) =>
-          (refNumeric(cname), tn) match {
-            case (Some(a), Some(b)) if a != b =>
-              val msg = s"Data type mismatch in ${m.filepath}: column '$cname'"
-              errors.add(ProcessingError(msg, ErrorSeverity.Error, "DataLoadingError", Some(m.filepath)))
-              throw new DataLoadingException(msg)
-            case _ => () // no data observed on one side -> cannot judge
-          }
+    val refNumeric = ref.zip(numericColumns(samples.head._2, ref.size)).toMap
+    metas.tail.zip(samples.tail).foreach { case (m, (h, rows)) =>
+      if (h.toSet != ref.toSet) {
+        val msg = s"Column mismatch in ${m.filepath}: expected ${ref.mkString(",")} got ${h.mkString(",")}"
+        errors.add(ProcessingError(msg, ErrorSeverity.Error, "DataLoadingError", Some(m.filepath)))
+        throw new DataLoadingException(msg)
+      }
+      // compare BY NAME (not position): reordered files align by name at
+      // read time, so only a column flipping numeric<->non-numeric under
+      // its own name is the reference's "Data type mismatch"
+      h.zip(numericColumns(rows, h.size)).foreach { case (cname, tn) =>
+        (refNumeric(cname), tn) match {
+          case (Some(a), Some(b)) if a != b =>
+            val msg = s"Data type mismatch in ${m.filepath}: column '$cname'"
+            errors.add(ProcessingError(msg, ErrorSeverity.Error, "DataLoadingError", Some(m.filepath)))
+            throw new DataLoadingException(msg)
+          case _ => () // no data observed on one side -> cannot judge
         }
       }
     }
@@ -304,27 +301,20 @@ class TimeSeriesLoader(
   /** F1/F2: strict format first, then an ordered coalesce of common formats
     * (the Spark-native, codegen'd replacement for the reference's per-row
     * dateparser.parse fallback — its acknowledged hot spot,
-    * load_file.py:1932-1955). The configured dateOrder (reference
-    * DATE_ORDER, load_file.py:1945,1976) decides which slashed-numeric
-    * family wins on ambiguous inputs like 01/02/2024.
+    * load_file.py:1932-1955). Each date family is one pattern whose time
+    * part is optional (`[ HH:mm[:ss]]`). The configured dateOrder
+    * (reference DATE_ORDER, load_file.py:1945,1976) decides which
+    * slashed-numeric family wins on ambiguous inputs like 01/02/2024.
     */
-  private def parseTimestamp(c: org.apache.spark.sql.Column) = {
+  private[load] def parseTimestamp(c: Column): Column = {
     val slashed = loading.dateOrder.toUpperCase match {
-      case "MDY" => Seq(
-        "MM/dd/yyyy HH:mm:ss", "MM/dd/yyyy HH:mm", "MM/dd/yyyy",
-        "dd/MM/yyyy HH:mm:ss", "dd/MM/yyyy HH:mm", "dd/MM/yyyy")
-      case "YMD" => Seq(
-        "yyyy/MM/dd HH:mm:ss", "yyyy/MM/dd HH:mm", "yyyy/MM/dd",
-        "dd/MM/yyyy HH:mm:ss", "dd/MM/yyyy HH:mm", "dd/MM/yyyy")
-      case _ => Seq( // DMY (reference default)
-        "dd/MM/yyyy HH:mm:ss", "dd/MM/yyyy HH:mm", "dd/MM/yyyy",
-        "MM/dd/yyyy HH:mm:ss", "MM/dd/yyyy HH:mm", "MM/dd/yyyy")
+      case "MDY" => Seq("MM/dd/yyyy", "dd/MM/yyyy")
+      case "YMD" => Seq("yyyy/MM/dd", "dd/MM/yyyy")
+      case _ => Seq("dd/MM/yyyy", "MM/dd/yyyy") // DMY (reference default)
     }
-    val fallbacks = (Seq(
-      loading.timeFormat,
-      "yyyy-MM-dd HH:mm:ss", "yyyy-MM-dd HH:mm", "yyyy-MM-dd") ++
-      slashed ++
-      Seq("MM-dd-yyyy HH:mm:ss", "yyyy/MM/dd HH:mm:ss")).distinct
+    val fallbacks = (loading.timeFormat +:
+      ("yyyy-MM-dd" +: slashed).map(d => s"$d[ HH:mm[:ss]]") :+
+      "MM-dd-yyyy HH:mm:ss" :+ "yyyy/MM/dd HH:mm:ss").distinct
     coalesce(fallbacks.map(f => try_to_timestamp(trim(c), lit(f))): _*)
   }
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import java.time.Duration
 
+import graft.core.Offsets
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -46,7 +47,7 @@ object Behavior {
         else col(typeCol) === step && col(tsCol) > col(s"t_$i")
       d.withColumn(s"t_${i + 1}", min(when(cond, col(tsCol))).over(w))
     }
-    val wMicros = window.toNanos / 1000L
+    val wMicros = Offsets.toMicros(window)
     // forward fold so the DEEPEST satisfied step ends outermost in the
     // CASE chain (level = max qualifying step, not min)
     val level = steps.indices.foldLeft(lit(0)) { (acc, i) =>

@@ -473,8 +473,6 @@ object Similarity {
       refineIters: Int = 0,
       precomputedCents: Option[DataFrame] = None
   ): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     // centroid table, not centroid LITERALS: nlist x dim literals would bloat
     // the expression tree (plan size / codegen compile grow with nlist); a
     // broadcast join keeps the plan O(1) and scales to any nlist

@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton) data layout: interleave the bits of two clustering

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.Offsets
 import graft.ops.TextStats
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -66,7 +67,7 @@ object StreamingCuration {
     val deduped =
       if (df.isStreaming)
         scored
-          .withWatermark(tsCol, s"${watermark.getSeconds} seconds")
+          .withWatermark(tsCol, Offsets.toSparkInterval(watermark))
           .dropDuplicatesWithinWatermark("content_hash")
       else scored.dropDuplicates("content_hash")
     deduped.withColumn("shard", shardOf(col("content_hash"), nShards, seed))

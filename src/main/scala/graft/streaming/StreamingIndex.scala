@@ -5,6 +5,7 @@ import java.time.Duration
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Offsets
 import graft.ops.Similarity
 
 /** Streaming index-maintenance plumbing on top of the batch ANN kernels.
@@ -51,7 +52,7 @@ object StreamingIndex {
   ): DataFrame =
     Similarity.assignCellsPacked(
       vectors
-        .withWatermark(tsCol, s"${horizon.toSeconds} seconds")
+        .withWatermark(tsCol, Offsets.toSparkInterval(horizon))
         .dropDuplicatesWithinWatermark(idCol),
       packedCents, vecCol)
       .select(col(idCol), col(tsCol), col("cell"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.core.LoadingConfig
+import graft.core.{LoadingConfig, Offsets}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -49,7 +49,8 @@ object StreamingResample {
   /** A1 as a streaming windowed aggregate: tumbling mean/sum/count per value
     * column, watermark-bounded state. Works identically on a batch frame
     * (window agg) — the same code path serves both, which is the idiomatic
-    * Spark shape for "one engine, batch and streaming".
+    * Spark shape for "one engine, batch and streaming": on a batch plan the
+    * optimizer drops the watermark node (`EliminateEventTimeWatermark`).
     */
   def upsampleStream(
       df: DataFrame,
@@ -58,16 +59,12 @@ object StreamingResample {
       valueCols: Seq[String],
       watermark: Duration = Duration.ofMinutes(10)
   ): DataFrame = {
-    val withWm =
-      if (df.isStreaming)
-        df.withWatermark(tsCol, s"${watermark.getSeconds} seconds")
-      else df
     val aggs = valueCols.flatMap(c => Seq(
       avg(col(c)).as(s"${c}_mean"),
       sum(col(c)).as(s"${c}_sum"),
       count(col(c)).as(s"${c}_count")))
-    withWm
-      .groupBy(window(col(tsCol), s"${freq.getSeconds} seconds"))
+    df.withWatermark(tsCol, Offsets.toSparkInterval(watermark))
+      .groupBy(window(col(tsCol), Offsets.toSparkInterval(freq)))
       .agg(aggs.head, aggs.tail: _*)
       .select(col("window.start").as(tsCol) +: valueCols.flatMap(c =>
         Seq(col(s"${c}_mean"), col(s"${c}_sum"), col(s"${c}_count"))): _*)
@@ -84,20 +81,15 @@ object StreamingResample {
       gap: Duration,
       keyCols: Seq[String],
       watermark: Duration = Duration.ofMinutes(10)
-  ): DataFrame = {
-    val withWm =
-      if (df.isStreaming)
-        df.withWatermark(tsCol, s"${watermark.getSeconds} seconds")
-      else df
-    withWm
+  ): DataFrame =
+    df.withWatermark(tsCol, Offsets.toSparkInterval(watermark))
       .groupBy((keyCols.map(col) :+
-        session_window(col(tsCol), s"${gap.getSeconds} seconds")): _*)
+        session_window(col(tsCol), Offsets.toSparkInterval(gap))): _*)
       .agg(count(lit(1)).as("n_events"),
         min(col(tsCol)).as("session_start"),
         max(col(tsCol)).as("session_end"))
       .select((keyCols.map(col) ++ Seq(col("session_start"),
         col("session_end"), col("n_events"))): _*)
-  }
 
   final case class SeriesPoint(series: String, ts: java.sql.Timestamp)
   final case class SeriesState(lastTs: Long)
@@ -131,7 +123,7 @@ object StreamingResample {
     val idleMs = idleTimeout.map(_.toMillis)
     val src = idleTimeout match {
       case Some(_) =>
-        points.withWatermark("ts", s"${wmDelay.toSeconds} seconds")
+        points.withWatermark("ts", Offsets.toSparkInterval(wmDelay))
           .as[SeriesPoint]
       case None => points
     }
@@ -427,7 +419,7 @@ object StreamingResample {
       watermark: Duration = Duration.ofMinutes(10)
   ): DataFrame =
     df.withColumn("__content_hash", sha2(col(contentCol).cast("string"), 256))
-      .withWatermark(tsCol, s"${watermark.toSeconds} seconds")
+      .withWatermark(tsCol, Offsets.toSparkInterval(watermark))
       .dropDuplicatesWithinWatermark("__content_hash")
       .drop("__content_hash")
 
@@ -442,9 +434,10 @@ object StreamingResample {
     * conjunct Spark would have to buffer both streams forever (and
     * rejects the plan in append mode).
     *
-    * Also runs unchanged on two batch frames (the condition degrades to a
-    * plain range join) — spec-pinned identical output, the "one engine,
-    * batch and streaming" contract.
+    * Also runs unchanged on two batch frames (the watermarks drop out of
+    * the batch plan and the condition degrades to a plain range join) —
+    * spec-pinned identical output, the "one engine, batch and streaming"
+    * contract.
     */
   def intervalJoinStream(
       left: DataFrame,
@@ -456,19 +449,12 @@ object StreamingResample {
       watermark: Duration = Duration.ofMinutes(10)
   ): DataFrame = {
     require(leftTs != rightTs, "rename one side: ts columns must differ")
-    val l =
-      if (left.isStreaming)
-        left.withWatermark(leftTs, s"${watermark.toSeconds} seconds")
-      else left
-    val r0 =
-      if (right.isStreaming)
-        right.withWatermark(rightTs, s"${watermark.toSeconds} seconds")
-      else right
-    val r = r0.withColumnRenamed(keyCol, "__rk")
-    l.join(r,
+    val wm = Offsets.toSparkInterval(watermark)
+    val r = right.withWatermark(rightTs, wm).withColumnRenamed(keyCol, "__rk")
+    left.withWatermark(leftTs, wm).join(r,
       col(keyCol) === col("__rk") &&
         col(rightTs) >= col(leftTs) &&
-        col(rightTs) <= col(leftTs) + expr(s"INTERVAL ${within.toSeconds} SECONDS"),
+        col(rightTs) <= col(leftTs) + expr(Offsets.toSparkInterval(within)),
       "inner")
       .drop("__rk")
   }

@@ -1,5 +1,7 @@
 package graft.ts
 
+import graft.core.Offsets
+import java.time.Duration
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -45,7 +47,7 @@ object AsOf {
       valueCols: Seq[String],
       keys: Seq[String] = Nil,
       direction: Direction = Direction.Backward,
-      tolerance: Option[Long] = None, // max |lt - rt| in seconds
+      tolerance: Option[Duration] = None, // max |lt - rt|
       prefix: String = "asof_"
   ): DataFrame = {
     val t = "__t"
@@ -132,10 +134,10 @@ object AsOf {
     })
 
     val tolFiltered = tolerance match {
-      case Some(sec) =>
+      case Some(tol) =>
         val ok = withMatches.withColumn(
           "__dist_ok",
-          abs(unix_micros(col(t)) - unix_micros(col("__m_ts"))) <= sec * 1000000L
+          abs(unix_micros(col(t)) - unix_micros(col("__m_ts"))) <= Offsets.toMicros(tol)
         )
         valueCols
           .foldLeft(ok) { (acc, c) =>

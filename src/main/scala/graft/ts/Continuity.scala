@@ -1,9 +1,10 @@
 package graft.ts
 
 import graft.core.{Offsets, TimeSeriesGap}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import java.time.Duration
+import java.time.temporal.ChronoUnit
 
 /** Continuity analysis (reference load_file.py:2024-2125):
   * consecutive-diff gap scan (W1/W2), span/coverage stats (A5), frequency
@@ -44,33 +45,30 @@ object Continuity {
         lags = Seq(RangeSeries.Lagged("__prev_ts", col(tsCol))), keys = seriesCols)
       .withColumn(diffCol, unix_micros(col(tsCol)) - unix_micros(col("__prev_ts")))
 
-  /** Median consecutive diff, in whole seconds (A6 fallback semantics,
-    * reference load_file.py:2064-2074 — emits "{n}s"; int() TRUNCATES, so a
-    * 90.7s median infers "90s", not "91s"). The reference first tries
-    * pd.infer_freq — intentionally omitted here: it only succeeds on
-    * perfectly regular index strings and the median fallback subsumes it for
-    * gap thresholds/grids. Exact median; switch to percentile_approx at
-    * extreme scale if the exact sort ever shows up in profiles.
+  /** The frequency a median consecutive diff of `row(i)` microseconds
+    * infers (A6 fallback semantics, reference load_file.py:2064-2074 —
+    * emits "{n}s"; int() TRUNCATES, so a 90.7s median infers "90s", not
+    * "91s"): whole seconds at 1 s or more, microseconds below; None when the
+    * median is null or zero. The reference first tries pd.infer_freq —
+    * intentionally omitted here: it only succeeds on perfectly regular index
+    * strings and the median fallback subsumes it for gap thresholds/grids.
     */
-  def inferFrequencySeconds(df: DataFrame, tsCol: String, seriesCols: Seq[String] = Nil): Option[Long] = {
-    val row = withDiff(df, tsCol, seriesCols).agg(median(col("diff_us"))).head()
-    if (row.isNullAt(0)) None else Some(usToSeconds(row.getDouble(0)))
-  }
+  private def medianFrequency(row: Row, i: Int): Option[Duration] =
+    Option.unless(row.isNullAt(i))(row.getDouble(i)).flatMap { us =>
+      val d =
+        if (us >= 1e6) Duration.ofSeconds((us / 1e6).toLong)
+        else Duration.of(us.toLong, ChronoUnit.MICROS)
+      Option.unless(d.isZero)(d)
+    }
 
-  private def usToSeconds(us: Double): Long = (us / 1e6).toLong
-
-  /** The frequency a median diff of `us` infers: truncated to whole seconds
-    * at 1 s or more (as above), kept in microseconds below; None when zero.
+  /** [[analyze]]'s inferred frequency alone, as an offset string ("3600s",
+    * "500ms"); None for fewer than two rows or a zero median. Exact median;
+    * switch to percentile_approx at extreme scale if the exact sort ever
+    * shows up in profiles.
     */
-  private def medianFrequency(us: Double): Option[Duration] = {
-    val d =
-      if (us >= 1e6) Duration.ofSeconds(usToSeconds(us))
-      else Duration.ofNanos(us.toLong * 1000L)
-    Option.unless(d.isZero)(d)
-  }
-
   def inferFrequency(df: DataFrame, tsCol: String): Option[String] =
-    inferFrequencySeconds(df, tsCol).map(s => Offsets.toFreqString(Duration.ofSeconds(s)))
+    medianFrequency(withDiff(df, tsCol).agg(median(col("diff_us"))).head(), 0)
+      .map(Offsets.toFreqString)
 
   /** Gap rows as a DataFrame (W2, reference load_file.py:2084-2092):
     * rows whose diff exceeds expected + minGap, with
@@ -124,7 +122,7 @@ object Continuity {
         TimeSeriesGap(
           r.getTimestamp(r.fieldIndex("gap_start")),
           r.getTimestamp(r.fieldIndex("gap_end")),
-          Duration.ofMillis(r.getLong(r.fieldIndex("duration_us")) / 1000L),
+          Duration.of(r.getLong(r.fieldIndex("duration_us")), ChronoUnit.MICROS),
           r.getLong(r.fieldIndex("expected_points"))
         )
       }
@@ -145,25 +143,23 @@ object Continuity {
     val diffed = withDiff(df, tsCol)
     val inferAgg = if (expectedFrequency.isEmpty) Seq(median(col("diff_us"))) else Nil
     val statsRow = diffed
-      .agg(min(col(tsCol)), (Seq(max(col(tsCol)), count(lit(1))) ++ inferAgg): _*)
+      .agg(unix_micros(max(col(tsCol))) - unix_micros(min(col(tsCol))),
+        (count(lit(1)) +: inferAgg): _*)
       .head()
     val expected = expectedFrequency
-      .orElse(Option.unless(statsRow.isNullAt(3))(statsRow.getDouble(3)).flatMap(medianFrequency))
+      .orElse(medianFrequency(statsRow, 2))
       .getOrElse(Duration.ofSeconds(1))
-    val n = statsRow.getLong(2)
-    val span =
-      if (statsRow.isNullAt(0) || statsRow.isNullAt(1)) None
-      else Some(Duration.ofMillis(statsRow.getTimestamp(1).getTime - statsRow.getTimestamp(0).getTime))
+    val n = statsRow.getLong(1)
+    val spanUs = Option.unless(statsRow.isNullAt(0))(statsRow.getLong(0))
     val gapList = collectGaps(gapRows(diffed, tsCol, expected, minGapSize, Nil))
     val gapTotal = gapList.foldLeft(Duration.ZERO)((acc, g) => acc.plus(g.duration))
-    val coverage = span match {
-      case Some(s) if s.toMillis > 0 =>
-        100.0 * (s.toMillis - gapTotal.toMillis).toDouble / s.toMillis
+    val coverage = spanUs match {
+      case Some(s) if s > 0 => 100.0 * (s - Offsets.toMicros(gapTotal)).toDouble / s
       case _ => 100.0
     }
     ContinuityReport(
       Some(Offsets.toFreqString(expected)),
-      span,
+      spanUs.map(Duration.of(_, ChronoUnit.MICROS)),
       gapList,
       gapTotal,
       coverage,

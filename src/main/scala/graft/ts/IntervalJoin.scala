@@ -2,6 +2,7 @@ package graft.ts
 
 import java.time.Duration
 
+import graft.core.Offsets
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -32,8 +33,7 @@ object IntervalJoin {
       bucket: Duration,
       equalKeys: Seq[String] = Nil
   ): DataFrame = {
-    val bMicros = bucket.toNanos / 1000L
-    require(bMicros > 0, "bucket must be positive")
+    val bMicros = Offsets.frequencyMicros(bucket)
     val pb = points.withColumn("__b",
       expr(s"unix_micros($ptTsCol) div $bMicros"))
     // half-open [start, end): the last covered bucket holds end − 1µs;

@@ -45,7 +45,7 @@ object Resample {
   }
 
   private def aggFor(method: Method, c: String, tsCol: String, skipna: Boolean,
-      sumAllNullZero: Boolean = false): Column = {
+      sumAllNullZero: Boolean): Column = {
     val base = method match {
       case Method.Mean => avg(col(c))
       case Method.Sum => sum(col(c))
@@ -82,7 +82,7 @@ object Resample {
       seriesCols: Seq[String] = Nil,
       sumAllNullZero: Boolean = false
   ): DataFrame = {
-    val win = window(col(tsCol), s"${freq.getSeconds} seconds")
+    val win = window(col(tsCol), Offsets.toSparkInterval(freq))
     val groups: Seq[Column] = win +: seriesCols.map(col)
     val aggs = valueCols.map(c => aggFor(method, c, tsCol, skipna, sumAllNullZero))
     df.groupBy(groups: _*)

@@ -1,6 +1,7 @@
 package graft.ts
 
-import org.apache.spark.sql.{DataFrame}
+import graft.core.Offsets
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import java.time.Duration
@@ -26,7 +27,7 @@ object Sessionize {
       seriesCols: Seq[String]
   ): DataFrame = {
     val w = Window.partitionBy(seriesCols.map(col): _*).orderBy(col(tsCol))
-    val gapUs = gap.getSeconds * 1000000L
+    val gapUs = Offsets.toMicros(gap)
     df.withColumn("__prev", lag(col(tsCol), 1).over(w))
       .withColumn("__new",
         when(col("__prev").isNull, 0L)

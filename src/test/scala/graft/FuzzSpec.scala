@@ -1,6 +1,7 @@
 package graft
 
 import java.sql.Timestamp
+import java.time.Duration
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -164,10 +165,10 @@ class FuzzSpec extends SparkSpec {
   private def runAsof(
       grid: Seq[Long],
       dir: AsOf.Direction,
-      tolSec: Option[Long]): Map[Long, (Option[Long], Option[Long])] = {
+      tolerance: Option[Duration]): Map[Long, (Option[Long], Option[Long])] = {
     val gdf = grid.map(tsOf).toDF("g")
     AsOf.join(gdf, eventsDf, "g", "ts", Seq("v"),
-        direction = dir, tolerance = tolSec, prefix = "asof_")
+        direction = dir, tolerance = tolerance, prefix = "asof_")
       .select(unix_micros(col("g")), col("asof_v").cast("long"),
         unix_micros(col("asof_ts")))
       .collect()
@@ -182,7 +183,7 @@ class FuzzSpec extends SparkSpec {
     test(s"fuzz-fixed asof backward tolerance boundary ${off}us") {
       // grid points exactly tol(+off) AFTER events: off<=0 in-tolerance
       val grid = asofGrid(TolSec * 1000000L + off)
-      val got = runAsof(grid, AsOf.Direction.Backward, Some(TolSec))
+      val got = runAsof(grid, AsOf.Direction.Backward, Some(Duration.ofSeconds(TolSec)))
       grid.foreach { g =>
         val want = bruteBackward(g, TolSec * 1000000L)
         assert(got(g) == ((want.flatMap(_._2), want.map(_._1))),
@@ -191,7 +192,7 @@ class FuzzSpec extends SparkSpec {
     }
     test(s"fuzz-fixed asof forward tolerance boundary ${off}us") {
       val grid = asofGrid(-(TolSec * 1000000L + off))
-      val got = runAsof(grid, AsOf.Direction.Forward, Some(TolSec))
+      val got = runAsof(grid, AsOf.Direction.Forward, Some(Duration.ofSeconds(TolSec)))
       grid.foreach { g =>
         val want = bruteForward(g, TolSec * 1000000L)
         assert(got(g) == ((want.flatMap(_._2), want.map(_._1))),

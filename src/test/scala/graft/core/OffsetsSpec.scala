@@ -30,7 +30,8 @@ class OffsetsSpec extends AnyFunSuite {
   }
 
   test("toSparkInterval renders a valid interval expression") {
-    assert(Offsets.toSparkInterval(Duration.ofMinutes(90)) == "INTERVAL 5400 SECOND")
+    assert(Offsets.toSparkInterval(Duration.ofMinutes(90)) == "INTERVAL 5400000000 MICROSECONDS")
+    assert(Offsets.toSparkInterval(Duration.ofMillis(1500)) == "INTERVAL 1500000 MICROSECONDS")
   }
 
   test("toFreqString matches the reference's pinned '3600s' format") {

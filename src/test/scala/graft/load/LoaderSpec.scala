@@ -367,6 +367,50 @@ class LoaderSpec extends SparkSpec {
     }
   }
 
+  test("timestamp fallback: one optional-time pattern per date family parses " +
+    "exactly like the three fixed patterns it replaces") {
+    // the previous fallback list, kept as the reference
+    def reference(order: String, timeFormat: String): Seq[String] = {
+      val slashed = order match {
+        case "MDY" => Seq(
+          "MM/dd/yyyy HH:mm:ss", "MM/dd/yyyy HH:mm", "MM/dd/yyyy",
+          "dd/MM/yyyy HH:mm:ss", "dd/MM/yyyy HH:mm", "dd/MM/yyyy")
+        case "YMD" => Seq(
+          "yyyy/MM/dd HH:mm:ss", "yyyy/MM/dd HH:mm", "yyyy/MM/dd",
+          "dd/MM/yyyy HH:mm:ss", "dd/MM/yyyy HH:mm", "dd/MM/yyyy")
+        case _ => Seq(
+          "dd/MM/yyyy HH:mm:ss", "dd/MM/yyyy HH:mm", "dd/MM/yyyy",
+          "MM/dd/yyyy HH:mm:ss", "MM/dd/yyyy HH:mm", "MM/dd/yyyy")
+      }
+      (Seq(timeFormat, "yyyy-MM-dd HH:mm:ss", "yyyy-MM-dd HH:mm", "yyyy-MM-dd") ++
+        slashed ++ Seq("MM-dd-yyyy HH:mm:ss", "yyyy/MM/dd HH:mm:ss")).distinct
+    }
+    val inputs = Seq("2024-01-02", "2024-01-02 03:04", "2024-01-02 03:04:05",
+      "2024-01-02T03:04:05", "2024-01-02 03:04:05.678", "  2024-01-02 03:04  ",
+      "2024-01-02 03", "2024-01-02 03:", "2024-1-2", "2024-02-30",
+      "01/02/2024", "01/02/2024 03:04", "01/02/2024 03:04:05", "13/02/2024 03:04",
+      "02/13/2024", "2024/01/02", "2024/01/02 03:04", "2024/01/02 03:04:05",
+      "01-02-2024 03:04:05", "01-02-2024", "1/2/2024 3:04", "garbage", "")
+      .map(Option(_)) :+ None
+    import spark.implicits._
+    val df = inputs.toDF("s")
+    val configs = for {
+      order <- Seq("DMY", "MDY", "YMD")
+      fmt <- Seq("dd/MM/yyyy HH:mm", "yyyy-MM-dd HH:mm:ss", "MM/dd/yyyy")
+    } yield (order, fmt)
+    val cols = configs.flatMap { case (order, fmt) =>
+      val loader = new TimeSeriesLoader(spark,
+        loading = LoadingConfig(dateOrder = order, timeFormat = fmt))
+      Seq(loader.parseTimestamp(col("s")),
+        coalesce(reference(order, fmt).map(f => try_to_timestamp(trim(col("s")), lit(f))): _*))
+    }
+    val rows = df.select(col("s") +: cols: _*).collect()
+    for (r <- rows; ((order, fmt), i) <- configs.zipWithIndex)
+      assert(r.get(1 + 2 * i) == r.get(2 + 2 * i),
+        s"'${r.getString(0)}' under dateOrder=$order timeFormat=$fmt")
+    assert(rows.exists(r => r.get(1) != null) && rows.exists(r => r.get(1) == null))
+  }
+
   test("metadata attach keeps exact per-file values for ' ', '+' and '%' in " +
     "file paths, on both sides of a by-name union") {
     val dir = tmpDir()

@@ -45,6 +45,23 @@ class StreamingSpec extends SparkSpec {
     assert(out.head().getDouble(1) == 2.0)
   }
 
+  test("upsampleStream at 500ms and sessionizeStream with a 1500ms gap keep " +
+    "sub-second widths on a batch frame") {
+    val base = ts("2024-01-01 00:00:00").getTime
+    val fourHz = (0 until 8).map(i => (new java.sql.Timestamp(base + i * 250L), i.toDouble))
+      .toDF("ts", "v")
+    val up = StreamingResample.upsampleStream(fourHz, "ts", Duration.ofMillis(500), Seq("v"))
+      .orderBy("ts").collect()
+    assert(up.map(r => (r.getTimestamp(0).getTime - base, r.getDouble(1), r.getLong(3))).toSeq ==
+      Seq((0L, 0.5, 2L), (500L, 2.5, 2L), (1000L, 4.5, 2L), (1500L, 6.5, 2L)))
+    val events = Seq(0L, 1200L, 2400L, 4000L)
+      .map(ms => ("u1", new java.sql.Timestamp(base + ms))).toDF("user_id", "ts")
+    val sessions = StreamingResample.sessionizeStream(events, "ts",
+        Duration.ofMillis(1500), Seq("user_id"))
+      .orderBy("session_start").collect()
+    assert(sessions.map(_.getLong(3)).toSeq == Seq(3L, 1L))
+  }
+
   test("sessionizeStream: native session windows across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[StreamingResample.SeriesPoint]

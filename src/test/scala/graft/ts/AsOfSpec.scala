@@ -1,6 +1,7 @@
 package graft.ts
 
 import graft.SparkSpec
+import java.time.Duration
 
 /** As-of join semantics incl. the reference's argmin tie-break (J1, survey
   * §7.4 trap 4: earlier row wins distance ties).
@@ -54,10 +55,23 @@ class AsOfSpec extends SparkSpec {
 
   test("tolerance nulls matches farther than the bound") {
     val out = AsOf.join(left, right, "lt", "rt", Seq("v"),
-        direction = AsOf.Direction.Nearest, tolerance = Some(120L))
+        direction = AsOf.Direction.Nearest, tolerance = Some(Duration.ofMinutes(2)))
       .orderBy("lt").collect()
     assert(Option(out(0).getString(out(0).fieldIndex("asof_v"))) == Some("a")) // 60s ok
     assert(out(1).isNullAt(out(1).fieldIndex("asof_v"))) // 600s > 120s
+  }
+
+  test("a 500ms tolerance keeps a 400ms match and nulls a 600ms one") {
+    val l = Seq(ts("2024-01-01 10:00:00"), ts("2024-01-01 10:30:00")).toDF("lt")
+    val r = Seq(
+      (ts("2024-01-01 09:59:59.6"), "a"),
+      (ts("2024-01-01 10:29:59.4"), "b")
+    ).toDF("rt", "v")
+    val out = AsOf.join(l, r, "lt", "rt", Seq("v"),
+        direction = AsOf.Direction.Backward, tolerance = Some(Duration.ofMillis(500)))
+      .orderBy("lt").collect()
+    assert(Option(out(0).getString(out(0).fieldIndex("asof_v"))) == Some("a"))
+    assert(out(1).isNullAt(out(1).fieldIndex("asof_v")))
   }
 
   test("empty right side yields all-null matches, not an error") {

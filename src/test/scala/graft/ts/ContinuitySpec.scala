@@ -100,6 +100,7 @@ class ContinuitySpec extends SparkSpec {
       assert(r.totalPoints == 240)
       assert(math.abs(r.coveragePercent - 100.0 * (239 - 120) / 239) < 1e-9)
     }
+    assert(Continuity.inferFrequency(twoHz, "ts") == Some("500ms"))
     assertThrows[graft.core.ConfigValidationException](
       Continuity.analyze(twoHz, "ts", Some(Duration.ZERO)))
   }

@@ -303,4 +303,21 @@ class ResampleSpec extends SparkSpec {
     assertThrows[ConfigValidationException](
       Resample.resampleTimeSeries(twoHz, "ts", "0s", Some("mean")))
   }
+
+  test("upsample at 500ms and 1500ms buckets a 2 Hz series by the exact " +
+    "sub-second width") {
+    val base = ts("2024-01-01 00:00:00").getTime
+    val points = ((0 until 120) ++ (359 until 479)).map(i => (i * 500L, i.toDouble))
+    val twoHz = points.map { case (ms, v) => (new java.sql.Timestamp(base + ms), v) }
+      .toDF("ts", "v")
+    for (freqMs <- Seq(500L, 1500L)) {
+      val want = points.groupBy(_._1 / freqMs).toSeq.sortBy(_._1)
+        .map { case (b, ps) => (base + b * freqMs, ps.map(_._2).sum / ps.size) }
+      val got = Resample.upsample(twoHz, "ts", Duration.ofMillis(freqMs),
+          Resample.Method.Mean, Seq("v"))
+        .orderBy("ts").collect()
+        .map(r => (r.getTimestamp(0).getTime, r.getDouble(1))).toSeq
+      assert(got == want, s"freq ${freqMs}ms")
+    }
+  }
 }

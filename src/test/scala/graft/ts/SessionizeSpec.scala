@@ -34,4 +34,14 @@ class SessionizeSpec extends SparkSpec {
     val s2 = out(2) // u2 single-event session: zero duration
     assert(s2.getLong(4) == 1L && s2.getLong(5) == 0L)
   }
+
+  test("a 1500ms gap keeps events 1.2 s apart in one session and splits at 1.6 s") {
+    val base = ts("2024-01-01 10:00:00").getTime
+    val df = Seq(0L, 1200L, 2400L, 4000L)
+      .map(ms => ("u1", new java.sql.Timestamp(base + ms))).toDF("user_id", "ts")
+    val out = Sessionize.sessions(df, "ts", Duration.ofMillis(1500), Seq("user_id"))
+      .orderBy("session_id").collect()
+    assert(out.map(_.getLong(4)).toSeq == Seq(3L, 1L))
+    assert(out(0).getLong(5) == 2400L * 1000L)
+  }
 }
