@@ -3,9 +3,14 @@ package graft.load
 import graft.core._
 import graft.meta._
 import graft.validate.{FileValidator, TimeSeriesValidator}
+import org.apache.hadoop.fs.{FileStatus, Path => HadoopPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import java.io.{IOException, UncheckedIOException}
+import java.nio.charset.Charset
 import java.nio.file.{Files, Path, Paths}
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
@@ -79,13 +84,14 @@ final case class LoadedSeries(
   * -> parse timestamps -> sort -> clean names -> hooks.
   *
   * Spark-first shape (NOT the reference's per-file pandas loop):
-  *   - steps 1-3 are metadata-plane and stay on the driver (file listing is
-  *     driver work in Spark too); row data NEVER lands on the driver;
+  *   - steps 1-3 are metadata-plane and stay on the driver; row data NEVER
+  *     lands on the driver;
   *   - the read is ONE multi-path csv scan per distinct header with an
   *     enforced all-string schema (so Catalyst sees a single scan node:
   *     column pruning, limit pushdown and partition-level parallelism all
   *     apply), not N unioned per-file plans whose lineage would grow
-  *     O(files);
+  *     O(files). The scan is built from discovery's own file list: Spark
+  *     neither lists nor globs the paths again (see scanFiles);
   *   - per-file constants (FileMetadataColumns) attach in each scan by
   *     looking up the scan's own `_metadata.file_path` in a driver-side map
   *     — no join, no shuffle, and the plan's size estimate stays that of
@@ -180,16 +186,59 @@ class TimeSeriesLoader(
     assemble(parts, headers.head, metas, None)
   }
 
-  /** All-string reader over one ordered header: the transformer step
+  /** The CSV options of both readers (uploads' `csvReader`, files' `scanFiles`). */
+  private val csvOptions: Map[String, String] = Map(
+    "sep" -> loading.delimiter,
+    "header" -> "true",
+    "encoding" -> loading.encoding,
+    "mode" -> "PERMISSIVE")
+
+  /** All-string schema over one ordered header: the transformer step
     * reproduces to_numeric(errors=coerce) on top of it.
     */
+  private def stringSchema(header: Seq[String]): StructType =
+    StructType(header.map(c => StructField(c, StringType, nullable = true)))
+
   private def csvReader(header: Seq[String]) =
-    spark.read
-      .option("sep", loading.delimiter)
-      .option("header", "true")
-      .option("encoding", loading.encoding)
-      .option("mode", "PERMISSIVE")
-      .schema(StructType(header.map(c => StructField(c, StringType, nullable = true))))
+    spark.read.options(csvOptions).schema(stringSchema(header))
+
+  /** A local file as the qualified Hadoop path the scan reports it by. */
+  private def hadoopPath(file: String): HadoopPath =
+    new HadoopPath(new java.io.File(file).getAbsoluteFile.toURI)
+
+  /** One CSV scan over files discovery already found. Each file is statted
+    * once on the driver and the scan's file index is seeded with those
+    * statuses, so Spark neither lists the paths again (above 32 paths its
+    * listing is a distributed job) nor reads them as globs (a `[`, `{` or
+    * `?` in a file name stays literal). `InMemoryFileIndex`,
+    * `FileStatusCache`, `HadoopFsRelation` and `CSVFileFormat` are
+    * Spark-internal classes; the plan is the one `spark.read.csv` builds.
+    */
+  private def scanFiles(header: Seq[String], paths: Seq[String]): DataFrame = {
+    val conf = spark.sessionState.newHadoopConfWithOptions(csvOptions)
+    val statuses = paths.map { p =>
+      val hp = hadoopPath(p)
+      try hp.getFileSystem(conf).getFileStatus(hp)
+      catch { case e: IOException => fail(p, s"Cannot read $p: $e", e) }
+    }
+    val statusOf = statuses.map(s => s.getPath -> Array(s)).toMap
+    val known = new FileStatusCache {
+      override def getLeafFiles(path: HadoopPath): Option[Array[FileStatus]] = statusOf.get(path)
+      def putLeafFiles(path: HadoopPath, files: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    val schema = stringSchema(header)
+    val index = new InMemoryFileIndex(spark, statuses.map(_.getPath), csvOptions, Some(schema),
+      known, Some(PartitionSpec.emptySpec))
+    spark.baseRelationToDataFrame(
+      HadoopFsRelation(index, new StructType(), schema, None, new CSVFileFormat, csvOptions)(spark))
+  }
+
+  /** Records a per-file load failure in the error ledger and raises it. */
+  private def fail(file: String, msg: String, cause: Throwable = null): Nothing = {
+    errors.add(ProcessingError(msg, ErrorSeverity.Error, "DataLoadingError", Some(file)))
+    throw new DataLoadingException(msg, cause)
+  }
 
   /** S5: header of the first file without reading data (manual limit
     * pushdown, reference nrows=0 at load_file.py:1727).
@@ -209,12 +258,15 @@ class TimeSeriesLoader(
     (header, lines.take(rows).map(_.split(sep, -1).map(_.trim)).toVector)
   }
 
-  /** `sample` from ONE bounded read of a file. */
-  private def sampleFile(p: Path, rows: Int): Sample = {
-    val s = Files.lines(p)
-    try sample(p.toString, s.iterator().asScala, rows)
-    finally s.close()
-  }
+  /** `sample` from ONE bounded read of a file, decoded with `loading.encoding`. */
+  private def sampleFile(p: Path, rows: Int): Sample =
+    try {
+      val s = Files.lines(p, Charset.forName(loading.encoding))
+      try sample(p.toString, s.iterator().asScala, rows)
+      finally s.close()
+    } catch {
+      case e @ (_: IOException | _: UncheckedIOException) => fail(p.toString, s"Cannot read $p: $e", e)
+    }
 
   /** P5: per-file header + dtype enforcement against file #1 (reference
     * load_file.py:1489-1531: column mismatch at :1513-1522, np.issubdtype
@@ -230,20 +282,15 @@ class TimeSeriesLoader(
     val ref = headers.head
     val refNumeric = ref.zip(numericColumns(samples.head._2, ref.size)).toMap
     metas.tail.zip(samples.tail).foreach { case (m, (h, rows)) =>
-      if (h.toSet != ref.toSet) {
-        val msg = s"Column mismatch in ${m.filepath}: expected ${ref.mkString(",")} got ${h.mkString(",")}"
-        errors.add(ProcessingError(msg, ErrorSeverity.Error, "DataLoadingError", Some(m.filepath)))
-        throw new DataLoadingException(msg)
-      }
+      if (h.toSet != ref.toSet)
+        fail(m.filepath, s"Column mismatch in ${m.filepath}: expected ${ref.mkString(",")} got ${h.mkString(",")}")
       // compare BY NAME (not position): reordered files align by name at
       // read time, so only a column flipping numeric<->non-numeric under
       // its own name is the reference's "Data type mismatch"
       h.zip(numericColumns(rows, h.size)).foreach { case (cname, tn) =>
         (refNumeric(cname), tn) match {
           case (Some(a), Some(b)) if a != b =>
-            val msg = s"Data type mismatch in ${m.filepath}: column '$cname'"
-            errors.add(ProcessingError(msg, ErrorSeverity.Error, "DataLoadingError", Some(m.filepath)))
-            throw new DataLoadingException(msg)
+            fail(m.filepath, s"Data type mismatch in ${m.filepath}: column '$cname'")
           case _ => () // no data observed on one side -> cannot judge
         }
       }
@@ -282,17 +329,14 @@ class TimeSeriesLoader(
     // per-file metadata keyed by the exact string the scan reports as
     // _metadata.file_path (a Hadoop-qualified, URI-encoded "file:/..." URI);
     // the O(1) map lookup runs per row inside the scan's own stage
-    val byPath = metas.map { m =>
-      new org.apache.hadoop.fs.Path(new java.io.File(m.filepath).getAbsoluteFile.toURI)
-        .toUri.toString -> metadataValues(m)
-    }.toMap
+    val byPath = metas.map(m => hadoopPath(m.filepath).toUri.toString -> metadataValues(m)).toMap
     val tagOf = udf((p: String) => byPath.get(p))
 
     // group by ordered header, preserving first-appearance order so the
     // result's column order is file #1's order (pandas concat parity)
     val parts = headers.distinct.map { h =>
       val paths = metas.zip(headers).collect { case (m, hh) if hh == h => m.filepath }
-      val scan = csvReader(h).csv(paths: _*)
+      val scan = scanFiles(h, paths)
       withMetadata(scan, tagOf(scan.metadataColumn("_metadata")("file_path")))
     }
     assemble(parts, headers.head, metas, stats)

@@ -17,10 +17,11 @@ final case class DiscoveryResult(files: Seq[Path], stats: DiscoveryStats)
 /** File discovery: glob scan (S1), direct file list (S2), in-memory
   * uploads (S3). Reference load_file.py:1104-1197 / :842-887 / :889-954.
   *
-  * Driver-side by design: per-file validation and stats precede any read, and
-  * file listing is driver work in Spark as well. The resulting valid-path list
-  * feeds spark.read.csv(paths: _*) — the Spark analogue of manual partition
-  * pruning (files rejected here are never scanned).
+  * Driver-side by design: per-file validation and stats precede any read.
+  * This is the pipeline's only listing: the loader builds its CSV scan from
+  * the resulting valid-path list (`TimeSeriesLoader.loadFiles`), and Spark
+  * neither lists nor globs those paths again. Files rejected here are never
+  * scanned.
   */
 object Discovery {
 

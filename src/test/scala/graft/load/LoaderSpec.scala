@@ -432,6 +432,77 @@ class LoaderSpec extends SparkSpec {
       (2.5, odd, ts("2024-01-01 01:00:00"), ts("2024-01-01 02:00:00"))))
   }
 
+  /** Rows per `source_file` of a loaded frame. */
+  private def rowsPerSource(loaded: LoadedSeries): Map[String, Long] =
+    loaded.df.groupBy("source_file").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  test("file names with glob metacharacters '[', '{' load literally") {
+    val dir = tmpDir()
+    val brackets = "Plant [1A] - Data - 01-01-2024 00_00_00 - 01-01-2024 01_00_00.csv"
+    val braces = "Plant {1A} - Data - 01-01-2024 01_00_00 - 01-01-2024 02_00_00.csv"
+    Files.writeString(dir.resolve(brackets), "timestamp;v\n01/01/2024 00:00;1.5\n")
+    Files.writeString(dir.resolve(braces), "timestamp;v\n01/01/2024 01:00;2.5\n")
+    val loaded = new TimeSeriesLoader(spark).load(dir.toString)
+    assert(rowsPerSource(loaded) == Map(brackets -> 1L, braces -> 1L))
+    assert(loaded.df.select(sum(col("v"))).head().getDouble(0) == 4.0)
+  }
+
+  test("a file name with '?' reads only itself, not a sibling it would match as a glob") {
+    val dir = tmpDir()
+    val question = "Plant 1A? - Data - 01-01-2024 00_00_00 - 01-01-2024 01_00_00.csv"
+    val sibling = "Plant 1AB - Data - 01-01-2024 00_00_00 - 01-01-2024 01_00_00.csv"
+    Files.writeString(dir.resolve(question), "timestamp;v\n01/01/2024 00:00;1\n01/01/2024 00:30;2\n")
+    Files.writeString(dir.resolve(sibling), "timestamp;v\n01/01/2024 00:15;4\n")
+    // loadFiles skips the sequence check, which would reject the two files' equal time ranges
+    val metas = Seq(question, sibling).map(n => new TimeMetadataExtractor().extractMetadata(dir.resolve(n)))
+    val loaded = new TimeSeriesLoader(spark).loadFiles(metas, None)
+    assert(loaded.df.count() == 3)
+    assert(rowsPerSource(loaded) == Map(question -> 2L, sibling -> 1L))
+  }
+
+  test("the header and dtype probe decodes with loading.encoding (latin-1 header)") {
+    val dir = tmpDir()
+    val name = "01-01-2024 00_00_00 - 01-01-2024 01_00_00.csv"
+    Files.write(dir.resolve(name),
+      "Time;Temp °C\n01/01/2024 00:00;20.5\n01/01/2024 00:30;21.5\n"
+        .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
+    val loader = new TimeSeriesLoader(spark, loading = LoadingConfig(encoding = "ISO-8859-1"))
+    assert(loader.originalColumnNames(dir.resolve(name).toString) == Seq("Time", "Temp °C"))
+    val df = loader.load(dir.toString).df
+    assert(df.columns.contains("Temp °C"))
+    assert(df.orderBy("Time").select("Temp °C").collect().map(_.getDouble(0)).toSeq == Seq(20.5, 21.5))
+  }
+
+  test("a file that vanishes between discovery and load raises DataLoadingException naming it") {
+    val dir = tmpDir()
+    writeFixture(dir)
+    val loader = new TimeSeriesLoader(spark)
+    val (metas, stats) = loader.discoverAndValidate(dir.toString)
+    val gone = "01-01-2024 01_00_00 - 01-01-2024 02_00_00.csv"
+    Files.delete(dir.resolve(gone))
+    val e = intercept[DataLoadingException](loader.loadFiles(metas, Some(stats)))
+    assert(e.getMessage.contains(gone))
+  }
+
+  test("building a load over 40 files (past Spark's 32-path listing threshold) starts no Spark job") {
+    val dir = tmpDir()
+    val fmt = java.time.format.DateTimeFormatter.ofPattern("MM-dd-yyyy HH_mm_ss")
+    val day = java.time.format.DateTimeFormatter.ofPattern("dd/MM/yyyy HH:mm")
+    val t0 = java.time.LocalDateTime.of(2024, 1, 1, 0, 0)
+    for (i <- 0 until 40) {
+      val (s, e) = (t0.plusHours(i), t0.plusHours(i + 1))
+      Files.writeString(dir.resolve(s"${s.format(fmt)} - ${e.format(fmt)}.csv"),
+        s"timestamp;v\n${s.format(day)};$i\n")
+    }
+    val loader = new TimeSeriesLoader(spark)
+    val (metas, stats) = loader.discoverAndValidate(dir.toString)
+    val (loaded, jobs) = withJobCount(loader.loadFiles(metas, Some(stats)))
+    assert(jobs == 0)
+    assert(loaded.df.inputFiles.length == 40)
+    assert(loaded.df.count() == 40)
+  }
+
   test("size estimate of the loaded frame stays within 4x the CSV bytes on disk") {
     val dir = tmpDir()
     writeFixture(dir)

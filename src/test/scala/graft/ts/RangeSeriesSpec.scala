@@ -118,28 +118,15 @@ class RangeSeriesSpec extends SparkSpec
 
   test("keyed ffill and interpolation with limit, as-of nearest and withDiff " +
     "start no Spark job to build, with both gates off") {
-    val sc = spark.sparkContext
-    val tag = "graft.test.keyedBuild"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(tag) != null)) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(tag, "1")
-    try {
+    val (_, jobs) = withJobCount {
       Fill.ffill(twoKeys, "ts", Seq("v"), limit = Some(2), seriesCols = Seq("k"))
       Fill.interpolateTime(twoKeys, "ts", Seq("v"), limit = Some(2), seriesCols = Seq("k"))
       AsOf.join(twoKeys.select(col("k"), col("ts").as("lt")),
         twoKeys.select(col("k"), col("ts").as("rt"), col("v")), "lt", "rt", Seq("v"),
         keys = Seq("k"), direction = AsOf.Direction.Nearest)
       Continuity.withDiff(twoKeys, "ts", Seq("k"))
-    } finally {
-      sc.setLocalProperty(tag, null)
-      org.apache.spark.ListenerBusBridge.drain(sc)
-      sc.removeSparkListener(listener)
     }
-    assert(jobs.get == 0)
+    assert(jobs == 0)
   }
 
   test("global withDiff (lag) matches the single-window form, including chunk-first rows") {

@@ -204,26 +204,13 @@ class ResampleSpec extends SparkSpec {
       ("a", ts("2024-01-01 11:10:00"), 2.0),
       ("b", ts("2024-01-01 10:05:00"), 3.0)
     ).toDF("k", "ts", "v")
-    val sc = spark.sparkContext
-    val tag = "graft.test.resampleBuild"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(tag) != null)) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(tag, "1")
-    try {
+    val (_, jobs) = withJobCount {
       Resample.resampleTimeSeries(df.drop("k"), "ts", "30min",
         methodResample = Some("mean"), methodFill = Some("ffill"))
       Resample.resampleTimeSeries(df, "ts", "30min",
         methodResample = Some("mean"), methodFill = Some("ffill"), seriesCols = Seq("k"))
-    } finally {
-      sc.setLocalProperty(tag, null)
-      org.apache.spark.ListenerBusBridge.drain(sc)
-      sc.removeSparkListener(listener)
     }
-    assert(jobs.get == 0)
+    assert(jobs == 0)
   }
 
   test("interpolate fills numeric columns only; string and timestamp columns keep " +
