@@ -110,6 +110,8 @@ object PlanSnapshot {
       case _: ExpandExec => Seq("expand")
       case _: GenerateExec => Seq("generate")
       case _: UnionExec => Seq("union")
+      // a CodegenFallback expression (any HOF) splits a codegen stage, so
+      // swapping one for a generated kernel moves `wscg` alone
       case _: WholeStageCodegenExec => Seq("wscg")
     }.flatten
     feats.groupBy(identity).map { case (k, v) => k -> v.size }

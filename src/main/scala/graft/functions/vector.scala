@@ -133,13 +133,18 @@ case class ArrayCosineSimilarity(left: Expression, right: Expression)
 /** Σ (a_i − b_i)² over two numeric arrays (shorter length wins) — the ANN
   * squared-L2 hot loop. Element-type dispatched: two long arrays (the
   * micro-quantized exact-replay representation) accumulate in LONG — the
-  * identical left-fold the HOF `aggregate(zip_with((a−b)²))` performs, so
-  * values are bit-equal (int64 headroom: micro-unit deltas ≤ ~4e6 squared
-  * × dim ≪ 2^63); float/double arrays accumulate in DOUBLE with the same
-  * sequential order, so each IEEE rounding step matches the HOF fold and
-  * the DuckDB replay. Exists because higher-order functions evaluate
-  * interpreted per element (the file-header note): for ANN scoring that
-  * loop ran per candidate pair.
+  * identical left-fold the HOF `aggregate(zip_with((a−b)²))` performs
+  * (int64 headroom: micro-unit deltas ≤ ~4e6 squared × dim ≪ 2^63);
+  * float/double arrays accumulate in DOUBLE with the same sequential
+  * order, so each IEEE rounding step matches the HOF fold and the DuckDB
+  * replay. On arrays of equal length the result equals the HOF's bit for
+  * bit, NULL included: a null element in either array yields NULL, as
+  * `(a−b)²` and then `acc + x` do in the HOF. On unequal lengths they
+  * differ: the kernel sums the shared prefix, while `zip_with` pads the
+  * shorter side with nulls and the HOF yields NULL. Exists because
+  * higher-order functions evaluate interpreted per element (the file-header
+  * note) and keep their operator out of whole-stage codegen: for ANN
+  * scoring that loop ran per candidate pair.
   */
 case class ArrayL2Sq(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -152,13 +157,15 @@ case class ArrayL2Sq(left: Expression, right: Expression)
   private lazy val lt = VecExpr.elementType(left)
   private lazy val rt = VecExpr.elementType(right)
   override def dataType: DataType = if (isLong) LongType else DoubleType
+  override def nullable: Boolean = true
   override def prettyName: String = "array_l2sq"
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
     val n = math.min(x.numElements(), y.numElements())
-    if (isLong) {
+    if ((0 until n).exists(i => x.isNullAt(i) || y.isNullAt(i))) null
+    else if (isLong) {
       var s = 0L
       var i = 0
       while (i < n) {
@@ -182,26 +189,19 @@ case class ArrayL2Sq(left: Expression, right: Expression)
       val i = ctx.freshName("i")
       val s = ctx.freshName("s")
       val d = ctx.freshName("d")
-      if (isLong)
-        s"""
-           |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-           |long $s = 0L;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  long $d = $a.getLong($i) - $b.getLong($i);
-           |  $s += $d * $d;
-           |}
-           |${ev.value} = $s;
-         """.stripMargin
-      else
-        s"""
-           |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-           |double $s = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  double $d = ${VecExpr.get(a, i, lt)} - ${VecExpr.get(b, i, rt)};
-           |  $s += $d * $d;
-           |}
-           |${ev.value} = $s;
-         """.stripMargin
+      val (acc, zero, xa, xb) =
+        if (isLong) ("long", "0L", s"$a.getLong($i)", s"$b.getLong($i)")
+        else ("double", "0.0", VecExpr.get(a, i, lt), VecExpr.get(b, i, rt))
+      s"""
+         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |$acc $s = $zero;
+         |for (int $i = 0; $i < $n; $i++) {
+         |  if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
+         |  $acc $d = $xa - $xb;
+         |  $s += $d * $d;
+         |}
+         |${ev.value} = $s;
+       """.stripMargin
     })
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =

@@ -110,4 +110,29 @@ class VectorSpec extends SparkSpec {
     val dfn = Seq((Some(Array(1.0)), None: Option[Array[Double]])).toDF("a", "b")
     assert(dfn.select(vector.array_l2sq(col("a"), col("b"))).head().isNullAt(0))
   }
+
+  test("array_l2sq: a null element yields NULL in both arms and both eval " +
+    "paths, as the HOF does") {
+    val local = Seq(
+      (Seq(Some(1.0), None, Some(3.0)), Seq(Some(2.0), Some(4.0), Some(5.0))),
+      (Seq(Some(1.0), Some(2.0)), Seq(Some(1.0), None)),
+      (Seq(Some(1.0), Some(2.0)), Seq(Some(0.5), Some(2.0)))
+    ).toDF("a", "b")
+    // local rows fold through the interpreted eval; id-dependent arrays over
+    // a range scan are not folded, so generated code runs
+    val generated = spark.range(2).select(
+      array(col("id").cast("double"), lit(null).cast("double")).as("a"),
+      array(lit(1.0), col("id").cast("double")).as("b"))
+    for ((df, valued) <- Seq(local -> 1, generated -> 0)) {
+      val l = df.select(col("a").cast("array<bigint>").as("a"),
+        col("b").cast("array<bigint>").as("b"))
+      val rows = df.select(vector.array_l2sq(col("a"), col("b")),
+          hofL2(col("a"), col("b"))).collect() ++
+        l.select(vector.array_l2sq(col("a"), col("b")).cast("double"),
+          aggregate(zip_with(col("a"), col("b"), (x, y) => (x - y) * (x - y)),
+            lit(0L), (acc, v) => acc + v).cast("double")).collect()
+      rows.foreach(r => assert(r.get(0) == r.get(1), r))
+      assert(rows.count(!_.isNullAt(0)) == 2 * valued)
+    }
+  }
 }
