@@ -115,7 +115,7 @@ def dataset_fingerprint(sfdir, cache_dir):
 
 def main():
     if not os.environ.get("SKIP_VERIFY"):
-        subprocess.run(["scripts/run.sh", "graft.Verify", SF, OUT], check=True)
+        subprocess.run(["scripts/run.sh", "graft.Verify", SF, OUT, *sorted(ONLY)], check=True)
     con = duckdb.connect()
     # parallel sweeps (sweep_parallel.sh) run many check.py processes at
     # once; without a cap each DuckDB grabs every core and they thrash

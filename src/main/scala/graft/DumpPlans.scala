@@ -9,6 +9,10 @@ import org.apache.spark.sql.SparkSession
   * shape as [[Bench]] (local[$SPARK_GRAFT_CPUS], shuffle.partitions =
   * cpus) so the static plans match what the bench executes; AQE's
   * runtime re-plan is not visible here, matching `.explain()` semantics.
+  * With AQE on that plan holds no `WholeStageCodegen` node, so each query
+  * is also written to `<outDir>/<query>_<tag>_noaqe.txt` from
+  * [[PlanSnapshot.session]]: AQE and the small-input gates off, the plan
+  * whose codegen stages `PLANS.json` counts as `wscg`.
   *
   * Usage: scripts/run.sh graft.DumpPlans <outDir> <tag> <query...>
   */
@@ -28,15 +32,19 @@ object DumpPlans {
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     Files.createDirectories(Paths.get(outDir))
+    val noAqe = PlanSnapshot.session(spark)
     names.foreach { name =>
       SparkEntry.queries.get(name) match {
         case Some(fn) =>
-          val plan =
-            try fn(spark, sfDir).queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
-            catch { case e: Throwable => s"EXPLAIN FAILED: ${e.getMessage}" }
-          Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), plan)
-          println(s"[plans] wrote $outDir/${name}_$tag.txt")
+          for ((session, suffix) <- Seq(spark -> "", noAqe -> "_noaqe")) {
+            val plan =
+              try fn(session, sfDir).queryExecution.explainString(
+                org.apache.spark.sql.execution.FormattedMode)
+              catch { case e: Throwable => s"EXPLAIN FAILED: ${e.getMessage}" }
+            val file = s"$outDir/${name}_$tag$suffix.txt"
+            Files.writeString(Paths.get(file), plan)
+            println(s"[plans] wrote $file")
+          }
         case None => System.err.println(s"[plans] unknown query: $name")
       }
     }

@@ -100,6 +100,10 @@ object Fuzz {
       "graft/ts/Fill.scala#global-interpolate-limit" -> ((s, dir) =>
         graft.ts.Fill.interpolateTime(
           dedupTs(s, dir), "ts", Seq("v"), Some(3), Nil)),
+      "graft/ts/Resample.scala#global-resample-nearest" -> ((s, dir) =>
+        graft.ts.Resample.resampleTimeSeries(
+          dedupTs(s, dir).withColumn("tag", col("v").cast("string")), "ts", "1h",
+          methodResample = Some("mean"))),
       "graft/ts/Continuity.scala#global-consecutive-diff" -> ((s, dir) =>
         graft.ts.Continuity.withDiff(dedupTs(s, dir), "ts", Nil)),
       "graft/ts/Downsample.scala#sax-global-rank" ->

@@ -120,6 +120,15 @@ object PlanSnapshot {
   /** Fingerprint every SparkEntry query with AQE off on a cloned session
     * (same SparkContext, isolated conf — concurrent suites keep AQE). */
   def all(spark: SparkSession, sfDir: String): Map[String, Map[String, Int]] = {
+    val snap = session(spark)
+    SparkEntry.queries.map { case (name, fn) =>
+      name -> fingerprint(fn(snap, sfDir))
+    }
+  }
+
+  /** The cloned session fingerprints are taken in: AQE and the small-input
+    * gates off. */
+  def session(spark: SparkSession): SparkSession = {
     val snap = spark.newSession()
     snap.conf.set("spark.sql.adaptive.enabled", "false")
     // pin the SCALE plan: the RangeSeries small-input fast path would
@@ -134,9 +143,7 @@ object PlanSnapshot {
     // (DispatchParitySpec pins small-vs-scale value parity)
     snap.conf.set(graft.ops.Spread.MaxBytesConf, "0")
     snap.conf.set("spark.graft.hdr.windowExactMaxBytes", "0")
-    SparkEntry.queries.map { case (name, fn) =>
-      name -> fingerprint(fn(snap, sfDir))
-    }
+    snap
   }
 
   /** Canonical rendering: one line per query, sorted names, sorted feature

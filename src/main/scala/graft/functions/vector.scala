@@ -31,24 +31,34 @@ private object VecExpr {
     case FloatType => arr.getFloat(i).toDouble
     case _ => arr.getDouble(i)
   }
+  /** True when either array holds a null among its first `n` elements. */
+  def anyNull(x: ArrayData, y: ArrayData, n: Int): Boolean =
+    (0 until n).exists(i => x.isNullAt(i) || y.isNullAt(i))
 }
 
-/** Σ a_i * b_i over two numeric arrays (shorter length wins). */
+/** Σ a_i * b_i over two numeric arrays (shorter length wins). A null
+  * element within the shared length yields NULL, as the HOF
+  * `aggregate(zip_with(a * b))` does.
+  */
 case class ArrayDotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
   private lazy val lt = VecExpr.elementType(left)
   private lazy val rt = VecExpr.elementType(right)
   override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
   override def prettyName: String = "array_dot"
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
     val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) { s += VecExpr.getEval(x, i, lt) * VecExpr.getEval(y, i, rt); i += 1 }
-    s
+    if (VecExpr.anyNull(x, y, n)) null
+    else {
+      var s = 0.0
+      var i = 0
+      while (i < n) { s += VecExpr.getEval(x, i, lt) * VecExpr.getEval(y, i, rt); i += 1 }
+      s
+    }
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -60,6 +70,7 @@ case class ArrayDotProduct(left: Expression, right: Expression)
          |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |double $s = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
+         |  if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
          |  $s += ${VecExpr.get(a, i, lt)} * ${VecExpr.get(b, i, rt)};
          |}
          |${ev.value} = $s;
@@ -75,7 +86,8 @@ case class ArrayDotProduct(left: Expression, right: Expression)
   * every value, so a NaN cosine would sail through `>= threshold` filters
   * (merging a zero embedding with its whole cell) and sort FIRST under
   * `ORDER BY cosine DESC`. NULL does the right thing everywhere — filters
-  * drop it, DESC ordering puts it last, and argmax folds skip it.
+  * drop it, DESC ordering puts it last, and argmax folds skip it. A null
+  * element within the shared length also yields NULL, as the HOF form does.
   */
 case class ArrayCosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -89,6 +101,7 @@ case class ArrayCosineSimilarity(left: Expression, right: Expression)
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
     val n = math.min(x.numElements(), y.numElements())
+    if (VecExpr.anyNull(x, y, n)) return null
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
@@ -110,15 +123,18 @@ case class ArrayCosineSimilarity(left: Expression, right: Expression)
       val nb = ctx.freshName("nb")
       val xv = ctx.freshName("xv")
       val yv = ctx.freshName("yv")
+      val hasNull = ctx.freshName("hasNull")
       s"""
          |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
+         |boolean $hasNull = false;
          |for (int $i = 0; $i < $n; $i++) {
+         |  if ($a.isNullAt($i) || $b.isNullAt($i)) { $hasNull = true; break; }
          |  double $xv = ${VecExpr.get(a, i, lt)};
          |  double $yv = ${VecExpr.get(b, i, rt)};
          |  $dot += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
          |}
-         |if ($na == 0.0 || $nb == 0.0) {
+         |if ($hasNull || $na == 0.0 || $nb == 0.0) {
          |  ${ev.isNull} = true;
          |} else {
          |  ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
@@ -164,7 +180,7 @@ case class ArrayL2Sq(left: Expression, right: Expression)
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
     val n = math.min(x.numElements(), y.numElements())
-    if ((0 until n).exists(i => x.isNullAt(i) || y.isNullAt(i))) null
+    if (VecExpr.anyNull(x, y, n)) null
     else if (isLong) {
       var s = 0L
       var i = 0

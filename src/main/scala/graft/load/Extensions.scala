@@ -49,6 +49,10 @@ class DefaultDataTransformer extends DataTransformer {
 /** Post-concat hook chain (reference ts_extensions.py:52-75; invocation
   * loop load_file.py:1853-1861 — hook failures are caught and logged, the
   * pipeline continues with the pre-hook frame).
+  *
+  * Hooks receive an UNORDERED frame: the loader's time sort runs after the
+  * last hook, so a hook must not rely on row order. The built-in
+  * [[OutlierRemovalHook]] does not (aggregates, then a row filter).
   */
 trait PostProcessingHook extends Serializable {
   def process(df: DataFrame, context: scala.collection.mutable.Map[String, Any]): DataFrame

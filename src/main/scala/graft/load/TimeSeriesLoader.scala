@@ -16,7 +16,9 @@ import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
 /** Loaded-corpus result (reference FileDataFrame.get_dataframe +
-  * concat_metadata, load_file.py:1863-1878).
+  * concat_metadata, load_file.py:1863-1878). `df` is in timestamp order;
+  * `unsorted` holds the same rows before that global sort, for the
+  * analyses that order the series themselves.
   */
 final case class LoadedSeries(
     df: DataFrame,
@@ -29,7 +31,7 @@ final case class LoadedSeries(
     // entries and callers read accumulated stats (e.g.
     // processing_stats.outliers_removed) after load
     hookContext: Map[String, Any] = Map.empty
-) {
+)(unsorted: DataFrame) {
   /** A4 concat metadata. The reference computes end_time with min() — a bug
     * (load_file.py:1873-1875); we implement the documented max().
     */
@@ -44,13 +46,15 @@ final case class LoadedSeries(
     throw new TimeValidationException("no timestamp column detected"))
 
   /** Reference analyze_time_series_continuity (load_file.py:2024-2125) as a
-    * method on the loaded corpus.
+    * method on the loaded corpus. Reads the rows before the loader's time
+    * sort: the diff window orders the series itself, so the sort's range
+    * exchange and sampling job would be paid for nothing.
     */
   def analyzeContinuity(
       expectedFrequency: Option[String] = None,
       minGapSize: String = "1min"
   ): graft.ts.Continuity.ContinuityReport =
-    graft.ts.Continuity.analyze(df, tsColOrThrow,
+    graft.ts.Continuity.analyze(unsorted, tsColOrThrow,
       expectedFrequency.map(graft.core.Offsets.parse),
       graft.core.Offsets.parse(minGapSize))
 
@@ -60,7 +64,9 @@ final case class LoadedSeries(
     * `file_start_time`, `file_end_time`) take the row nearest to each bucket.
     * "ffill"/"bfill" fill every column, "interpolate" only the numeric ones.
     * The grid bounds stay in the plan; only `includeAllGaps = false` collects
-    * them while building.
+    * them while building. Like `analyzeContinuity` it reads the rows before
+    * the loader's time sort: buckets are aggregated, and the fill windows
+    * order the grid themselves.
     */
   def resample(
       frequency: String,
@@ -70,7 +76,7 @@ final case class LoadedSeries(
       includeAllGaps: Boolean = true,
       maxGapSize: Option[String] = None
   ): DataFrame =
-    graft.ts.Resample.resampleTimeSeries(df, tsColOrThrow, frequency,
+    graft.ts.Resample.resampleTimeSeries(unsorted, tsColOrThrow, frequency,
       methodResample, methodFill, fillLimit, includeAllGaps, maxGapSize)
 
   /** Reference generate_time_series_report (load_file.py:1023-1102). */
@@ -97,8 +103,13 @@ final case class LoadedSeries(
   *     — no join, no shuffle, and the plan's size estimate stays that of
   *     the CSV bytes. In-memory uploads attach the same values as literals;
   *   - from there files and uploads share one path: the same header check,
-  *     one `DataTransformer` call on the whole frame, one timestamp parse;
-  *   - the optional global time sort is the only wide exchange.
+  *     one `DataTransformer` call on the whole frame, one timestamp parse,
+  *     naming and hooks;
+  *   - the optional global time sort runs last, on `LoadedSeries.df` only,
+  *     and is the loader's only wide exchange. Continuity and resample read
+  *     the frame from before it: each re-orders the series in its own
+  *     window or aggregate, so a sort under them would cost a sampling job
+  *     and a range exchange per action and change no result.
   */
 object TimeSeriesLoader {
   /** Per-file columns on every loaded row (P4): file name, start time, end time. */
@@ -365,6 +376,7 @@ class TimeSeriesLoader(
   /** The one finish step for both sources. `parts` are all-string frames
     * already tagged with FileMetadataColumns; the timestamp column comes
     * from the first header (O1), the transformer runs once on the union.
+    * Hooks see the frame before the time sort, which runs last.
     */
   private def assemble(
       parts: Seq[DataFrame],
@@ -381,12 +393,7 @@ class TimeSeriesLoader(
         transformed.withColumn(tc, parseTimestamp(col(tc)))
       case _ => transformed
     }
-    val sorted = tsCol match {
-      case Some(tc) if sortByTimestamp => parsed.orderBy(col(tc))
-      case _ => parsed
-    }
-
-    val renamed = applyNaming(sorted)
+    val renamed = applyNaming(parsed)
     val tsRenamed = tsCol.map(cleanName)
     // one accumulating context shared by every hook in the chain (reference
     // threads a single dict, ts_extensions.py:58-75, load_file.py:1853-1861)
@@ -399,7 +406,11 @@ class TimeSeriesLoader(
           acc
       }
     }
-    LoadedSeries(hooked, metas, tsRenamed, errors, stats, context.toMap)
+    val sorted = tsRenamed match {
+      case Some(tc) if sortByTimestamp && hooked.columns.contains(tc) => hooked.orderBy(col(tc))
+      case _ => hooked
+    }
+    LoadedSeries(sorted, metas, tsRenamed, errors, stats, context.toMap)(hooked)
   }
 
   private def cleanName(c: String): String = {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
 import java.sql.Timestamp
 import java.time.Duration
+import scala.collection.immutable.ListMap
 
 /** Resampling operators (A1/A2/U3/J1; reference load_file.py:2127-2360).
   *
@@ -21,8 +22,12 @@ import java.time.Duration
   *   - target grids are generated ON EXECUTORS via sequence()+explode over
   *     that same bounds frame (or the driver's gap-excluding segment list),
   *     never a driver-side row loop;
-  *   - non-numeric "nearest" columns reuse AsOf.join (one sort shuffle,
-  *     per series when keyed) instead of the reference's O(n*m) python scan.
+  *   - non-numeric "nearest" columns come from bucket edges, not from a
+  *     window over every row (the reference runs an O(n*m) python scan):
+  *     the row nearest to a bucket label is that bucket's first row or the
+  *     previous non-empty bucket's last row. Both ride the numeric bucket
+  *     aggregate as `min_by`/`max_by` structs, and one lag over the bucket
+  *     table (per series when keyed) pairs them.
   */
 object Resample {
 
@@ -117,7 +122,16 @@ object Resample {
     * `method`+`skipna`, non-numeric columns by the row nearest to the bucket
     * label within the same series (J1), original column order preserved
     * (reference load_file.py:2151-2239). Expects a non-null `__bucket`
-    * timestamp column.
+    * timestamp label that is at or below every row of its bucket and above
+    * every row of earlier buckets, and expects every row that can be
+    * nearest to a label to sit in some bucket.
+    *
+    * Nearest rule: the row nearest to label b is the first row at or after
+    * b — bucket b's first row — or the last row at or before b — the
+    * previous non-empty bucket's last row. Both come from the bucket
+    * aggregate as `(ts, non-numeric…)` structs; one lag over the bucket
+    * table pairs them. The earlier row wins ties, as in `AsOf` and the
+    * reference's argmin (load_file.py:2218-2228).
     */
   private def aggregateBuckets(
       bucketed: DataFrame,
@@ -132,36 +146,38 @@ object Resample {
     val (numeric, nonNumeric) = dataCols.partition(isNumeric(original, _))
     val groups = (keys :+ "__bucket").map(col)
 
-    val numAgg =
-      if (numeric.nonEmpty) {
-        val aggs = numeric.map(c => aggFor(method, c, tsCol, skipna, sumAllNullZero))
-        bucketed.groupBy(groups: _*).agg(aggs.head, aggs.tail: _*)
-      } else bucketed.select(groups: _*).distinct()
+    val edgeRow = struct((col(tsCol).as("t") +:
+      nonNumeric.zipWithIndex.map { case (c, i) => col(c).as(s"v$i") }): _*)
+    val edgeAggs =
+      if (nonNumeric.isEmpty) Nil
+      else Seq(min_by(edgeRow, col(tsCol)).as("__first"), max_by(edgeRow, col(tsCol)).as("__last"))
+    val aggs = numeric.map(c => aggFor(method, c, tsCol, skipna, sumAllNullZero)) ++ edgeAggs
+    val perBucket =
+      if (aggs.nonEmpty) bucketed.groupBy(groups: _*).agg(aggs.head, aggs.tail: _*)
+      else bucketed.select(groups: _*).distinct()
 
     val result =
-      if (nonNumeric.isEmpty) numAgg
+      if (nonNumeric.isEmpty) perBucket
       else {
-        val nearest = AsOf.join(
-          left = numAgg.select(groups: _*),
-          right = original.select(((keys :+ tsCol) ++ nonNumeric).map(col): _*),
-          leftTs = "__bucket",
-          rightTs = tsCol,
-          valueCols = nonNumeric,
-          keys = keys,
-          direction = AsOf.Direction.Nearest,
-          prefix = "__n_"
-        )
-        numAgg.join(
-          nearest.select(groups ++ nonNumeric.map(c => col(s"__n_$c").as(c)): _*),
-          keys :+ "__bucket",
-          "left"
-        )
+        val b = unix_micros(col("__bucket"))
+        val withPrev = RangeSeries.withRunning(perBucket, b, Nil,
+          lags = Seq(RangeSeries.Lagged("__prev", col("__last"))), keys = keys)
+        val usePrev = col("__prev").isNotNull &&
+          b - unix_micros(col("__prev.t")) <= unix_micros(col("__first.t")) - b
+        val nearest = when(usePrev, col("__prev")).otherwise(col("__first"))
+        withPrev.withColumns(ListMap(nonNumeric.zipWithIndex.map { case (c, i) =>
+          c -> nearest(s"v$i")
+        }: _*))
       }
     result.select((keys.map(col) :+ col("__bucket").as(tsCol)) ++ dataCols.map(col): _*)
   }
 
   /** A2 + J1: irregular-bin resample ("resample_with_dates", reference
-    * load_file.py:2151-2239) over explicit edges.
+    * load_file.py:2151-2239) over explicit edges. Rows before the first
+    * edge aggregate into a sentinel bucket below it, so the first labels'
+    * nearest rows may come from them; the sentinel is dropped after.
+    * Rows after the last edge are never nearest to a label: every output
+    * bucket holds a row at or before that edge.
     */
   def resampleWithDates(
       df: DataFrame,
@@ -171,10 +187,14 @@ object Resample {
       skipna: Boolean = true,
       sumAllNullZero: Boolean = false
   ): DataFrame = {
+    val first = lit(edges.minBy(_.getTime))
+    val sentinel = timestamp_micros(unix_micros(first) - 1)
     val bucketed = df
-      .withColumn("__bucket", bucketExpr(tsCol, edges))
+      .withColumn("__bucket", coalesce(bucketExpr(tsCol, edges),
+        when(col(tsCol) < first, sentinel)))
       .filter(col("__bucket").isNotNull)
     aggregateBuckets(bucketed, df, tsCol, Nil, method, skipna, sumAllNullZero)
+      .filter(col(tsCol) >= first)
   }
 
   /** Segment bounds excluding gap interiors. We implement the reference's
@@ -258,10 +278,14 @@ object Resample {
         val t = col(tsCol)
         val s = col("__s")
         val k = ceil((unix_micros(t) - unix_micros(s)).cast("double") / fUs.toDouble).cast("long")
-        val bucketed = proj.join(bounds.drop("__e"), seriesCols)
+        // `t <= __e` holds for every row; it keeps `__e` referenced, so
+        // column pruning leaves this side the grid's own min/max aggregate
+        // and the plan reuses its exchange instead of adding a min-only one
+        val bucketed = proj.join(bounds, seriesCols)
+          .filter(t <= col("__e"))
           .withColumn("__bucket",
             when(t === s, s).otherwise(timestamp_micros(unix_micros(s) + (k - 1) * fUs)))
-          .drop("__s")
+          .drop("__s", "__e")
           .filter(col("__bucket").isNotNull)
         val agg = aggregateBuckets(bucketed, proj, tsCol, seriesCols, Method.parse(m),
           skipna = true)

@@ -135,4 +135,39 @@ class VectorSpec extends SparkSpec {
       assert(rows.count(!_.isNullAt(0)) == 2 * valued)
     }
   }
+
+  /** Local rows (interpreted eval) and id-dependent arrays over a range scan
+    * (generated code), each with null elements; `valued` rows hold none.
+    */
+  private def nullElementFrames: Seq[(org.apache.spark.sql.DataFrame, Int)] = Seq(
+    Seq(
+      (Seq(Some(1.0), None, Some(3.0)), Seq(Some(2.0), Some(4.0), Some(5.0))),
+      (Seq(Some(1.0), Some(2.0)), Seq(Some(1.0), None)),
+      (Seq(Some(1.0), Some(2.0)), Seq(Some(0.5), Some(2.0)))
+    ).toDF("a", "b") -> 1,
+    spark.range(1, 3).select(
+      array(col("id").cast("double"), lit(null).cast("double")).as("a"),
+      array(lit(1.0), col("id").cast("double")).as("b")) -> 0)
+
+  test("array_dot: a null element yields NULL in both eval paths, as the HOF does") {
+    for ((df, valued) <- nullElementFrames) {
+      val rows = df.select(vector.array_dot(col("a"), col("b")),
+        hofDot(col("a"), col("b"))).collect()
+      rows.foreach(r => assert(r.get(0) == r.get(1), r))
+      assert(rows.count(!_.isNullAt(0)) == valued)
+    }
+  }
+
+  test("array_cosine: a null element yields NULL in both eval paths, as the HOF does") {
+    def hofCos(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+      hofDot(a, b) / (sqrt(hofDot(a, a)) * sqrt(hofDot(b, b)))
+    for ((df, valued) <- nullElementFrames) {
+      val rows = df.select(vector.array_cosine(col("a"), col("b")),
+        hofCos(col("a"), col("b"))).collect()
+      rows.foreach(r => assert(r.isNullAt(0) == r.isNullAt(1), r))
+      rows.filterNot(_.isNullAt(0)).foreach(r =>
+        assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 1e-12, r))
+      assert(rows.count(!_.isNullAt(0)) == valued)
+    }
+  }
 }

@@ -566,6 +566,35 @@ class LoaderSpec extends SparkSpec {
     assert(!ctxEmpty.contains("processing_stats"))
   }
 
+  test("continuity and resample on LoadedSeries equal the same analyses of the sorted df, " +
+    "with and without an OutlierRemovalHook; df stays in timestamp order") {
+    val dir = tmpDir()
+    // three hourly files at 1-minute cadence: the second written newest
+    // first, the third with a 10-minute outage and one outlier at 02:45
+    def file(h: Int, rows: Seq[(Int, Double)]): Unit =
+      Files.writeString(dir.resolve(f"01-01-2024 $h%02d_00_00 - 01-01-2024 ${h + 1}%02d_00_00.csv"),
+        "timestamp;v\n" + rows.map { case (m, v) => f"01/01/2024 $h%02d:$m%02d;$v\n" }.mkString)
+    file(0, (0 until 60).map(m => (m, m.toDouble)))
+    file(1, (0 until 60).reverse.map(m => (m, 60.0 + m)))
+    file(2, (0 until 60).filterNot(m => m >= 20 && m < 30)
+      .map(m => (m, if (m == 45) 10000.0 else 120.0 + m)))
+    def sortedRows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.sortBy(_.getTimestamp(0).getTime)
+    for (hooks <- Seq(Nil, Seq(new OutlierRemovalHook(Seq("v"))))) {
+      val loaded = new TimeSeriesLoader(spark, hooks = hooks).load(dir.toString)
+      val tss = loaded.df.select("timestamp").collect().map(_.getTimestamp(0))
+      assert(tss.length == (if (hooks.isEmpty) 170 else 169))
+      assert(tss.sliding(2).forall { case Array(a, b) => a.before(b) }, s"hooks=$hooks")
+      val report = loaded.analyzeContinuity()
+      assert(report == graft.ts.Continuity.analyze(loaded.df, "timestamp"))
+      assert(report.gaps.size == 1)
+      val resampled = loaded.resample("1min", Some("mean"))
+      assert(resampled.columns.toSeq == loaded.df.columns.toSeq)
+      assert(sortedRows(resampled) == sortedRows(
+        graft.ts.Resample.resampleTimeSeries(loaded.df, "timestamp", "1min", Some("mean"))))
+    }
+  }
+
   test("extractAll aggregates failures into one FileParsingException") {
     val dir = tmpDir()
     Files.writeString(dir.resolve("good 01-01-2024 00_00_00 - 01-01-2024 01_00_00.csv"), "x\n1\n")
