@@ -17,14 +17,23 @@ any plan change). The rule and inputs are recorded in a _provenance_*
 string entry (string values are invisible to BudgetCheck's name->number
 regex parser, so provenance never becomes a fake budget row).
 
-Usage: python3 scripts/mint_budgets.py BENCH1.json BENCH2.json ... > BUDGETS.json
+The core count the runs used is recorded as `_cpus`: graft.Bench checks
+budgets only on runs at that core count (and at sf0.1), because ceilings
+minted on 32 cores say nothing about an 8-core run. Keys starting with `_`
+are never budgets.
+
+Usage: python3 scripts/mint_budgets.py --cpus N BENCH1.json BENCH2.json ... > BUDGETS.json
 """
 import json, statistics, sys, datetime
 
 MARGIN_MULT = 1.25
 MARGIN_ADD = 0.30
 
-runs = [json.load(open(p))["queries"] for p in sys.argv[1:]]
+args = sys.argv[1:]
+if len(args) < 2 or args[0] != "--cpus" or not args[1].isdigit():
+    raise SystemExit("usage: mint_budgets.py --cpus N BENCH1.json BENCH2.json ...")
+cpus, paths = int(args[1]), args[2:]
+runs = [json.load(open(p))["queries"] for p in paths]
 if len(runs) < 2:
     raise SystemExit("need >= 2 bench files for a meaningful median")
 names = sorted(set().union(*[set(r) for r in runs]))
@@ -38,6 +47,7 @@ prov = (f"rule=max({MARGIN_MULT}*median, median+{MARGIN_ADD}s) over "
         f"{datetime.date.today().isoformat()}; run totals "
         + ",".join(f"{sum(r.values()):.1f}s" for r in runs))
 print("{")
+print(f'  "_cpus": {cpus},')
 print(f'  "_provenance_rule": {json.dumps(prov)},')
 body = ",\n".join(f'  "{n}": {out[n]}' for n in names)
 print(body)

@@ -80,15 +80,20 @@ object Bench {
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(b => math.max(0L, b.getCollectionTime)).sum / 1000.0
     }
-    // per-query ceilings (BUDGETS.json, sf0.1 scale): violations surface in
-    // the bench line so a single-query 2x regression can't hide inside the
-    // 229-query total. Only meaningful at the budgets' own scale factor.
+    // per-query ceilings (BUDGETS.json): violations surface in the bench
+    // line so a single-query 2x regression can't hide inside the 229-query
+    // total. Only meaningful at the budgets' own scale factor and core
+    // count; otherwise the line says why they were skipped.
+    val budgetPath = java.nio.file.Paths.get("BUDGETS.json")
+    val budgetFile =
+      if (java.nio.file.Files.isReadable(budgetPath)) java.nio.file.Files.readString(budgetPath) else ""
+    val budgetSkip = BudgetCheck.skipReason(sfDir, cpus.toInt, BudgetCheck.mintedCpus(budgetFile))
     val budgetViolations =
-      if (sfDir.endsWith("sf0.1")) BudgetCheck.violations(
-        runs.map { case (k, v, _) => k -> v }.toMap,
-        BudgetCheck.load(java.nio.file.Paths.get("BUDGETS.json")))
+      if (budgetSkip.isEmpty) BudgetCheck.violations(
+        runs.map { case (k, v, _) => k -> v }.toMap, BudgetCheck.parse(budgetFile))
       else Map.empty[String, (Double, Double)]
-    val budgetJson = BudgetCheck.toJson(budgetViolations)
+    val budgetJson = BudgetCheck.toJson(budgetViolations) +
+      s""","budget_check":"${budgetSkip.fold("checked")("skipped: " + _)}""""
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"runs":2,"run_sums":[$sum1,$sum2],"codegen_compiles":$nCompiles,"gc_sec":$gcSec,"budget_violations":$budgetJson,"sf":"$sfDir"}"""
     // The driver snapshots only a ~2000-char TAIL of stdout and JSON-parses
     // what it finds there. The full 235-query line is ~8 KB, so printing it

@@ -6,15 +6,18 @@ package graft
   * only visible because two rounds were hand-diffed).
   *
   * `BUDGETS.json` (repo root) maps query name → ceiling seconds at sf0.1
-  * on the driver box (local[32], best-of-2), set at ~2× the measured time
-  * when the budget was minted. [[Bench]] evaluates every run against it
-  * and emits violations in its JSON line; queries newer than the budgets
-  * file simply aren't checked (they get a ceiling when the file is next
-  * regenerated).
+  * (best-of-2), set with a margin over the measured time when the budget
+  * was minted; its `_cpus` entry records the core count it was minted on.
+  * [[Bench]] checks a run against it only at sf0.1 on that core count
+  * (ceilings minted on 32 cores say nothing about an 8-core run) and emits
+  * violations, or why it skipped them, in its JSON line; queries newer than
+  * the budgets file simply aren't checked (they get a ceiling when the file
+  * is next regenerated).
   *
   * The file is flat string→number JSON, parsed with a regex rather than a
   * JSON library — the library has zero runtime deps beyond Spark, and the
-  * file is repo-controlled.
+  * file is repo-controlled. Keys starting with `_` describe the file and
+  * are never budgets.
   */
 object BudgetCheck {
 
@@ -24,9 +27,24 @@ object BudgetCheck {
     else parse(java.nio.file.Files.readString(path))
 
   private[graft] def parse(json: String): Map[String, Double] = {
-    val entry = """"([^"]+)"\s*:\s*([0-9]+(?:\.[0-9]+)?)""".r
+    val entry = """"([^"_][^"]*)"\s*:\s*([0-9]+(?:\.[0-9]+)?)""".r
     entry.findAllMatchIn(json).map(m => m.group(1) -> m.group(2).toDouble).toMap
   }
+
+  /** The core count the budgets were minted on (`"_cpus": N`), if recorded. */
+  private[graft] def mintedCpus(json: String): Option[Int] =
+    """"_cpus"\s*:\s*([0-9]+)""".r.findFirstMatchIn(json).map(_.group(1).toInt)
+
+  /** Why a run at `sfDir` on `cpus` cores cannot be checked against budgets
+    * minted at sf0.1 on `minted` cores; None when it can.
+    */
+  def skipReason(sfDir: String, cpus: Int, minted: Option[Int]): Option[String] =
+    if (!sfDir.endsWith("sf0.1")) Some(s"budgets are for sf0.1, run is at $sfDir")
+    else minted match {
+      case None => Some("budgets record no core count")
+      case Some(c) if c != cpus => Some(s"budgets minted on $c cpus, run on $cpus")
+      case _ => None
+    }
 
   /** Queries whose measured best-of-N seconds exceed their ceiling.
     * Unknown queries (no budget row) pass — a new operator must not fail

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -166,9 +167,16 @@ case class ArrayL2Sq(left: Expression, right: Expression)
     extends BinaryExpression {
   private lazy val isLong: Boolean = (left.dataType, right.dataType) match {
     case (ArrayType(LongType, _), ArrayType(LongType, _)) => true
-    case _ =>
-      // validates float|double element types (throws on anything else)
-      VecExpr.elementType(left); VecExpr.elementType(right); false
+    case _ => false
+  }
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(LongType, _), ArrayType(LongType, _)) |
+        (ArrayType(FloatType | DoubleType, _), ArrayType(FloatType | DoubleType, _)) =>
+      TypeCheckResult.TypeCheckSuccess
+    case (l, r) =>
+      TypeCheckResult.TypeCheckFailure(
+        "array_l2sq takes two arrays whose elements are both long, or both float/double; " +
+          s"got ${l.simpleString(10)} and ${r.simpleString(10)}")
   }
   private lazy val lt = VecExpr.elementType(left)
   private lazy val rt = VecExpr.elementType(right)

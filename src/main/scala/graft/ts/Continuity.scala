@@ -1,7 +1,7 @@
 package graft.ts
 
 import graft.core.{Offsets, TimeSeriesGap}
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftExpressionBridge, Row}
 import org.apache.spark.sql.functions._
 import java.time.Duration
 import java.time.temporal.ChronoUnit
@@ -15,7 +15,9 @@ import java.time.temporal.ChronoUnit
   * Without keys (single global series, the reference's model) it runs
   * RangeSeries' two-pass range-partitioned form instead of a single-task
   * global sort. Gap LISTS are driver-sized by definition (one entry per
-  * hole), so collecting them is metadata-plane, not data-plane. Thresholds,
+  * hole), so collecting them is metadata-plane, not data-plane: `analyze`
+  * brings back the largest diffs in its one stats aggregate and needs a
+  * second action only for a series with more gaps than that. Thresholds,
   * expected points and frequencies are in microseconds, so sub-second
   * cadences work.
   */
@@ -80,18 +82,8 @@ object Continuity {
       expected: Duration,
       minGap: Duration,
       seriesCols: Seq[String] = Nil
-  ): DataFrame = gapRows(withDiff(df, tsCol, seriesCols), tsCol, expected, minGap, seriesCols)
-
-  /** `gapsDf` over a frame that already carries `withDiff`'s columns. */
-  private def gapRows(
-      diffed: DataFrame,
-      tsCol: String,
-      expected: Duration,
-      minGap: Duration,
-      seriesCols: Seq[String]
   ): DataFrame = {
     val expectedUs = Offsets.frequencyMicros(expected)
-    val thresholdUs = expectedUs + Offsets.toMicros(minGap)
     val selectCols: Seq[Column] =
       seriesCols.map(col) ++ Seq(
         col("__prev_ts").as("gap_start"),
@@ -100,10 +92,14 @@ object Continuity {
         (floor(col("diff_us") / lit(expectedUs)) - lit(1))
           .cast("long").as("expected_points")
       )
-    diffed
-      .filter(col("diff_us") > lit(thresholdUs))
+    withDiff(df, tsCol, seriesCols)
+      .filter(col("diff_us") > lit(thresholdMicros(expected, minGap)))
       .select(selectCols: _*)
   }
+
+  /** A gap's smallest diff, exclusive: expected + minGap, in microseconds. */
+  private def thresholdMicros(expected: Duration, minGap: Duration): Long =
+    Offsets.frequencyMicros(expected) + Offsets.toMicros(minGap)
 
   /** Collected gap list, in start order (driver-sized, so the sort runs on
     * the driver, not as a distributed orderBy).
@@ -113,10 +109,8 @@ object Continuity {
       tsCol: String,
       expected: Duration,
       minGap: Duration
-  ): Seq[TimeSeriesGap] = collectGaps(gapsDf(df, tsCol, expected, minGap))
-
-  private def collectGaps(gapRows: DataFrame): Seq[TimeSeriesGap] =
-    gapRows
+  ): Seq[TimeSeriesGap] =
+    gapsDf(df, tsCol, expected, minGap)
       .collect()
       .map { r =>
         TimeSeriesGap(
@@ -129,10 +123,18 @@ object Continuity {
       .toVector
       .sortBy(_.start)
 
+  /** Diffs [[analyze]]'s one aggregate brings back, largest first. */
+  private val Cap = 10000
+
   /** Full continuity report (reference analyze_time_series_continuity,
-    * load_file.py:2024-2125). One diff frame feeds both actions: one agg for
-    * span, count and (when no frequency is given) the median diff, and one
-    * collect of the gap rows.
+    * load_file.py:2024-2125), in one action when it can be. One aggregate
+    * over the diff frame returns span, count, (when no frequency is given)
+    * the median diff, and the `Cap` largest diffs with their two rows
+    * (`collect_top_k`). Every gap's diff exceeds the threshold, so when
+    * fewer than `Cap` rows came back or the smallest one returned is at or
+    * below it, those diffs hold every gap and the driver filters them.
+    * Otherwise a second action collects the gap rows. Both paths build the
+    * gap list the same way, with `gapsDf`'s expected_points formula.
     */
   def analyze(
       df: DataFrame,
@@ -141,17 +143,30 @@ object Continuity {
       minGapSize: Duration = Duration.ofMinutes(1)
   ): ContinuityReport = {
     val diffed = withDiff(df, tsCol)
+    val gapCols = Seq(col("diff_us"), col("__prev_ts"), col(tsCol))
     val inferAgg = if (expectedFrequency.isEmpty) Seq(median(col("diff_us"))) else Nil
     val statsRow = diffed
       .agg(unix_micros(max(col(tsCol))) - unix_micros(min(col(tsCol))),
-        (count(lit(1)) +: inferAgg): _*)
+        (count(lit(1)) +: GraftExpressionBridge.internalFn("collect_top_k",
+          struct(gapCols: _*), lit(Cap), lit(false)) +: inferAgg): _*)
       .head()
     val expected = expectedFrequency
-      .orElse(medianFrequency(statsRow, 2))
+      .orElse(medianFrequency(statsRow, 3))
       .getOrElse(Duration.ofSeconds(1))
+    val expectedUs = Offsets.frequencyMicros(expected)
+    val thresholdUs = thresholdMicros(expected, minGapSize)
     val n = statsRow.getLong(1)
     val spanUs = Option.unless(statsRow.isNullAt(0))(statsRow.getLong(0))
-    val gapList = collectGaps(gapRows(diffed, tsCol, expected, minGapSize, Nil))
+    val top = statsRow.getSeq[Row](2)
+    def isGap(r: Row) = !r.isNullAt(0) && r.getLong(0) > thresholdUs
+    val gapRows =
+      if (top.size < Cap || !isGap(top.last)) top.filter(isGap)
+      else diffed.filter(col("diff_us") > lit(thresholdUs)).select(gapCols: _*).collect().toSeq
+    val gapList = gapRows.map { r =>
+      val diffUs = r.getLong(0)
+      TimeSeriesGap(r.getTimestamp(1), r.getTimestamp(2), Duration.of(diffUs, ChronoUnit.MICROS),
+        math.floor(diffUs.toDouble / expectedUs).toLong - 1)
+    }.toVector.sortBy(_.start)
     val gapTotal = gapList.foldLeft(Duration.ZERO)((acc, g) => acc.plus(g.duration))
     val coverage = spanUs match {
       case Some(s) if s > 0 => 100.0 * (s - Offsets.toMicros(gapTotal)).toDouble / s

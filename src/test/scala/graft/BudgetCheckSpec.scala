@@ -35,6 +35,22 @@ class BudgetCheckSpec extends AnyFunSuite {
     assert(BudgetCheck.violations(Map("q" -> 9.9), none).isEmpty)
   }
 
+  test("budgets apply only at sf0.1 on the core count they were minted on; " +
+    "_-prefixed keys are never budgets") {
+    val json = """{ "_cpus": 32, "_provenance_rule": "x", "ts_ffill": 0.98 }"""
+    assert(BudgetCheck.parse(json) == Map("ts_ffill" -> 0.98))
+    assert(BudgetCheck.mintedCpus(json) == Some(32))
+    assert(BudgetCheck.mintedCpus("""{ "ts_ffill": 0.98 }""").isEmpty)
+    assert(BudgetCheck.skipReason("/data/sf0.1", 32, Some(32)).isEmpty)
+    assert(BudgetCheck.skipReason("/data/sf0.1", 8, Some(32)).exists(_.contains("32 cpus")))
+    assert(BudgetCheck.skipReason("/data/sf0.01", 32, Some(32)).isDefined)
+    assert(BudgetCheck.skipReason("/data/sf0.1", 32, None).isDefined)
+    // the committed file records its core count
+    val path = java.nio.file.Paths.get("BUDGETS.json")
+    if (java.nio.file.Files.isReadable(path))
+      assert(BudgetCheck.mintedCpus(java.nio.file.Files.readString(path)).isDefined)
+  }
+
   test("violations render as a stable JSON object") {
     val j = BudgetCheck.toJson(Map("b" -> ((2.5, 1.0)), "a" -> ((3.0, 1.5))))
     assert(j == """{"a":{"sec":3.0,"budget":1.5},"b":{"sec":2.5,"budget":1.0}}""")

@@ -111,6 +111,24 @@ class VectorSpec extends SparkSpec {
     assert(dfn.select(vector.array_l2sq(col("a"), col("b"))).head().isNullAt(0))
   }
 
+  test("array_l2sq: mixed element types fail analysis with their own message, " +
+    "in the DataFrame and SQL forms") {
+    val df = Seq((Array(1L, 2L), Array(1.0, 2.0), Array(1.0f, 2.0f), Array("x")))
+      .toDF("l", "d", "f", "s")
+    for ((a, b) <- Seq("l" -> "d", "d" -> "l", "f" -> "l", "s" -> "s")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        df.select(vector.array_l2sq(col(a), col(b))))
+      assert(e.getMessage.contains("both long, or both float/double"), s"($a, $b): ${e.getMessage}")
+    }
+    // float against double stays legal
+    assert(df.select(vector.array_l2sq(col("f"), col("d"))).head().getDouble(0) == 0.0)
+    vector.register(spark)
+    df.createOrReplaceTempView("graft_l2_mixed")
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT array_l2sq(l, d) FROM graft_l2_mixed"))
+    assert(e.getMessage.contains("both long, or both float/double"), e.getMessage)
+  }
+
   test("array_l2sq: a null element yields NULL in both arms and both eval " +
     "paths, as the HOF does") {
     val local = Seq(

@@ -595,6 +595,79 @@ class LoaderSpec extends SparkSpec {
     }
   }
 
+  /** Global (true) or per-partition (false) sorts in `df`'s logical plan. */
+  private def sortKinds(df: org.apache.spark.sql.DataFrame): Seq[Boolean] =
+    df.queryExecution.logical.collect { case s: org.apache.spark.sql.catalyst.plans.logical.Sort => s.global }
+
+  test("loaded.df sorts on file-edge chunks: timestamp order with nulls first, the rows " +
+    "of a global orderBy, each row in the partition its timestamp names, one job fewer; " +
+    "in the JVM's zone and away from it") {
+    val dir = tmpDir()
+    // v is the row's wall-clock minute of 01/01/2024 (-1 on the row whose
+    // timestamp does not parse); files at 10-minute cadence
+    def file(name: String, minutes: Seq[Int], extra: String = ""): Path = {
+      val p = dir.resolve(name)
+      Files.writeString(p, "timestamp;v\n" + minutes.map(m =>
+        f"01/01/2024 ${m / 60}%02d:${m % 60}%02d;$m\n").mkString + extra)
+      p
+    }
+    def hourly(h: Int, minutes: Seq[Int], extra: String = ""): Path =
+      file(f"01-01-2024 $h%02d_00_00 - 01-01-2024 ${h + 1}%02d_00_00.csv", minutes, extra)
+    val named = Seq(
+      hourly(0, 0 to 50 by 10),
+      hourly(1, (60 to 110 by 10).reverse),
+      hourly(2, 120 to 170 by 10),
+      hourly(3, 400 to 450 by 10), // rows at 06:40-07:30, outside the name's 03:00-04:00
+      hourly(4, 240 to 290 by 10, "not a time;-1\n"),
+      hourly(5, 300 to 350 by 10),
+      hourly(6, 360 to 390 by 10))
+    val ex = new TimeMetadataExtractor()
+    val metas = named.map(ex.extractMetadata) :+
+      FileMetadata(file("extra readings.csv", Seq(155, 165, 500)).toString)
+    // 7 start times over 4 shuffle partitions: groups of files 0, 1-2, 3-4,
+    // 5-6, so the edges are the starts of files 1, 3 and 5
+    val edgeMinutes = Seq(60, 180, 300)
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    val jvmOffset = java.util.TimeZone.getDefault.toZoneId.getRules.getOffset(java.time.Instant.now)
+    val away = Seq("Asia/Tokyo", "America/Los_Angeles")
+      .find(z => java.time.ZoneId.of(z).getRules.getOffset(java.time.Instant.now) != jvmOffset).get
+    try {
+      for (z <- Seq(java.util.TimeZone.getDefault.getID, away)) {
+        spark.conf.set("spark.sql.session.timeZone", z)
+        val loaded = new TimeSeriesLoader(spark).loadFiles(metas, None)
+        assert(sortKinds(loaded.df) == Seq(false), z)
+        val rows = loaded.df.collect().toSeq
+        assert(rows.length == 6 * 6 + 4 + 3 + 1, z)
+        assert(rows.head.isNullAt(0), z)
+        val tss = rows.tail.map(_.getTimestamp(0))
+        assert(tss.sliding(2).forall { case Seq(a, b) => a.before(b) }, z)
+        val reference = new TimeSeriesLoader(spark, sortByTimestamp = false)
+          .loadFiles(metas, None).df.orderBy("timestamp").collect().toSeq
+        assert(rows == reference, z)
+        val placed = loaded.df.select("v").rdd
+          .mapPartitionsWithIndex((i, it) => it.map(r => (i, r.getDouble(0)))).collect()
+        assert(placed.forall { case (i, v) => i == edgeMinutes.count(_ <= v) }, s"$z: ${placed.toSeq}")
+        assert(placed.map(_._1).distinct.length == 4, z)
+        val (_, jobs) = withJobCount(loaded.df.write.format("noop").mode("overwrite").save())
+        assert(jobs == 2, z)
+      }
+    } finally spark.conf.set("spark.sql.session.timeZone", zone)
+  }
+
+  test("a one-file load, or files with no start time in their names, sort with orderBy") {
+    val dir = tmpDir()
+    writeFixture(dir)
+    val loader = new TimeSeriesLoader(spark)
+    val (metas, _) = loader.discoverAndValidate(dir.toString)
+    for (ms <- Seq(metas.take(1), metas.map(m => FileMetadata(m.filepath)))) {
+      val df = loader.loadFiles(ms, None).df
+      assert(sortKinds(df) == Seq(true))
+      val tss = df.select("timestamp").collect().map(_.getTimestamp(0))
+      assert(tss.length == 2 * ms.size)
+      assert(tss.sliding(2).forall { case Array(a, b) => !a.after(b) })
+    }
+  }
+
   test("extractAll aggregates failures into one FileParsingException") {
     val dir = tmpDir()
     Files.writeString(dir.resolve("good 01-01-2024 00_00_00 - 01-01-2024 01_00_00.csv"), "x\n1\n")

@@ -1,7 +1,10 @@
 package graft.ts
 
 import graft.SparkSpec
+import graft.core.Offsets
 import java.time.Duration
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 /** Continuity analysis pins (A5/A6/W1/W2; reference
   * tests/test_load_file.py:954-976 pin inferred "3600s" on hourly data).
@@ -103,5 +106,76 @@ class ContinuitySpec extends SparkSpec {
     assert(Continuity.inferFrequency(twoHz, "ts") == Some("500ms"))
     assertThrows[graft.core.ConfigValidationException](
       Continuity.analyze(twoHz, "ts", Some(Duration.ZERO)))
+  }
+
+  /** `body` with the RangeSeries fast-path gates at 0 (the chunked spine). */
+  private def gatesOff[T](body: => T): T = {
+    spark.conf.set("graft.rangeSeries.fastPathRows", "0")
+    spark.conf.set("graft.rangeSeries.fastPathBytes", "0")
+    try body
+    finally {
+      spark.conf.unset("graft.rangeSeries.fastPathRows")
+      spark.conf.unset("graft.rangeSeries.fastPathBytes")
+    }
+  }
+
+  /** analyze's gap list against the one `gapsDf` collects at the same
+    * frequency, expected points included, inferred and given.
+    */
+  private def assertGapsAgree(df: DataFrame, given: Duration): Unit =
+    for (freq <- Seq(None, Some(given))) {
+      val r = Continuity.analyze(df, "ts", freq)
+      val expected = Offsets.parse(r.inferredFrequency.get)
+      assert(expected == given, s"expectedFrequency=$freq")
+      assert(r.gaps == Continuity.gaps(df, "ts", expected, Duration.ofMinutes(1)),
+        s"expectedFrequency=$freq")
+      assert(r.totalGapDuration == r.gaps.map(_.duration).foldLeft(Duration.ZERO)(_ plus _))
+    }
+
+  /** The minute series of the partition test: 240 minutes, 4 holes. */
+  private def minuteHoles: DataFrame = {
+    val missing = Seq((20, 5), (70, 9), (130, 3), (200, 15))
+      .flatMap { case (m, k) => m until m + k }.toSet
+    (0 until 240).filterNot(missing)
+      .map(m => ts(f"2024-01-01 ${m / 60}%02d:${m % 60}%02d:00")).toDF("ts").repartition(4)
+  }
+
+  test("the one-action report equals the gapsDf gap list on every fixture, " +
+    "inferred and given, fast path and gates at 0") {
+    val base = ts("2024-01-01 00:00:00").getTime
+    val twoHz = ((0 until 120) ++ (359 until 479))
+      .map(i => new java.sql.Timestamp(base + i * 500L)).toDF("ts")
+    val continuous = (0 to 5).map(h => ts(f"2024-01-01 $h%02d:00:00")).toDF("ts")
+    val fixtures = Seq(gappy -> Duration.ofHours(1), continuous -> Duration.ofHours(1),
+      minuteHoles -> Duration.ofMinutes(1), twoHz -> Duration.ofMillis(500))
+    for ((df, freq) <- fixtures) {
+      assertGapsAgree(df, freq)
+      gatesOff(assertGapsAgree(df, freq))
+    }
+  }
+
+  test("more gaps than one aggregate returns: the second action collects them, " +
+    "and the report still equals the gapsDf gap list") {
+    // diffs 60 s, 60 s, 300 s repeating: 11,999 gaps of 4 missing points
+    // each, more than analyze's aggregate brings back
+    val periods = 12000L
+    val base = ts("2024-01-01 00:00:00").getTime / 1000
+    val df = spark.range(3 * periods).select(timestamp_seconds(
+      lit(base) + (col("id") / 3).cast("long") * 420 + (col("id") % 3) * 60).as("ts"))
+    val (r, jobs) = withJobCount(Continuity.analyze(df, "ts"))
+    assert(r.gaps.size == periods - 1)
+    assert(r.gaps.forall(g => g.duration == Duration.ofMinutes(5) && g.expectedPoints == 4))
+    assert(jobs == 4) // the aggregate's two jobs, then the gap collect's two
+    assertGapsAgree(df, Duration.ofMinutes(1))
+    gatesOff(assertGapsAgree(df, Duration.ofMinutes(1)))
+  }
+
+  test("analyze on a small series runs one action: 2 Spark jobs") {
+    // gappy's hours from a range scan (local rows plan one more exchange)
+    val tiny = spark.range(7).filter(!col("id").isin(3, 4))
+      .select(timestamp_seconds(col("id") * 3600).as("ts"))
+    val (r, jobs) = withJobCount(Continuity.analyze(tiny, "ts"))
+    assert(r.gaps.map(_.expectedPoints) == Seq(2L))
+    assert(jobs == 2) // the aggregate's exchange and its result; 4 with a second action
   }
 }
