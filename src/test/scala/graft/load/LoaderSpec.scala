@@ -4,9 +4,16 @@ import graft.SparkSpec
 import graft.core._
 import graft.meta.{Discovery, TimeMetadataExtractor}
 import java.nio.file.{Files, Path}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateMutableProjection
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+import org.apache.spark.sql.GraftExpressionBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Success, Try}
 
 /** End-to-end CSV pipeline parity (the reference's flagship
   * initialize_processing; tests/test_load_file.py:890-897, 1336-1352 pins:
@@ -367,6 +374,10 @@ class LoaderSpec extends SparkSpec {
     }
   }
 
+  private val zoneKey = "spark.sql.session.timeZone"
+  private val policyKey = "spark.sql.legacy.timeParserPolicy"
+  private val excludedKey = "spark.sql.optimizer.excludedRules"
+
   test("timestamp fallback: one optional-time pattern per date family parses " +
     "exactly like the three fixed patterns it replaces") {
     // the previous fallback list, kept as the reference
@@ -385,30 +396,80 @@ class LoaderSpec extends SparkSpec {
       (Seq(timeFormat, "yyyy-MM-dd HH:mm:ss", "yyyy-MM-dd HH:mm", "yyyy-MM-dd") ++
         slashed ++ Seq("MM-dd-yyyy HH:mm:ss", "yyyy/MM/dd HH:mm:ss")).distinct
     }
+    // the last six pass the structural parse but fail resolution (Feb 31,
+    // hour 24, Feb 29 of a common year) or fall in Europe/Berlin's DST gap
     val inputs = Seq("2024-01-02", "2024-01-02 03:04", "2024-01-02 03:04:05",
       "2024-01-02T03:04:05", "2024-01-02 03:04:05.678", "  2024-01-02 03:04  ",
       "2024-01-02 03", "2024-01-02 03:", "2024-1-2", "2024-02-30",
       "01/02/2024", "01/02/2024 03:04", "01/02/2024 03:04:05", "13/02/2024 03:04",
       "02/13/2024", "2024/01/02", "2024/01/02 03:04", "2024/01/02 03:04:05",
-      "01-02-2024 03:04:05", "01-02-2024", "1/2/2024 3:04", "garbage", "")
-      .map(Option(_)) :+ None
-    import spark.implicits._
-    val df = inputs.toDF("s")
+      "01-02-2024 03:04:05", "01-02-2024", "1/2/2024 3:04", "garbage", "",
+      "31/02/2024 10:00", "2024-01-02 24:00:00", "29/02/2023",
+      "2024-03-31 02:30:00", "31/03/2024 02:30", "03/31/2024 02:30:00")
+    val rows = inputs.map(s => InternalRow(UTF8String.fromString(s))) :+ InternalRow(null)
     val configs = for {
       order <- Seq("DMY", "MDY", "YMD")
       fmt <- Seq("dd/MM/yyyy HH:mm", "yyyy-MM-dd HH:mm:ss", "MM/dd/yyyy")
     } yield (order, fmt)
-    val cols = configs.flatMap { case (order, fmt) =>
-      val loader = new TimeSeriesLoader(spark,
-        loading = LoadingConfig(dateOrder = order, timeFormat = fmt))
-      Seq(loader.parseTimestamp(col("s")),
-        coalesce(reference(order, fmt).map(f => try_to_timestamp(trim(col("s")), lit(f))): _*))
+    val sessions = Seq("UTC" -> "CORRECTED", "Europe/Berlin" -> "CORRECTED",
+      "UTC" -> "LEGACY", "UTC" -> "EXCEPTION")
+    import spark.implicits._
+    val saved = Seq(zoneKey, policyKey, excludedKey).map(k => k -> spark.conf.getOption(k))
+    try for ((zone, policy) <- sessions) {
+      spark.conf.set(zoneKey, zone)
+      spark.conf.set(policyKey, policy)
+      // a LocalRelation projection would be evaluated (interpreted) by
+      // ConvertToLocalRelation; kept as a Project, its optimized expressions
+      // (GetTimestamp for try_to_timestamp) are evaluated below both ways
+      spark.conf.set(excludedKey, "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+      // per config: the kernel, the coalesce it replaces (same formats), and
+      // the fixed patterns. The last agrees only under CORRECTED: a LEGACY
+      // SimpleDateFormat reads `[...]` as literal text, and under EXCEPTION
+      // which inputs raise depends on the patterns
+      def tried(formats: Seq[String]) = coalesce(formats.map(f => try_to_timestamp(trim(col("s")), lit(f))): _*)
+      val cols = configs.flatMap { case (order, fmt) =>
+        val kernel = new TimeSeriesLoader(spark,
+          loading = LoadingConfig(dateOrder = order, timeFormat = fmt)).parseTimestamp(col("s"))
+        val formats = GraftExpressionBridge.expression(kernel).asInstanceOf[ParseTimestamp].formats
+        Seq(kernel, tried(formats), tried(reference(order, fmt)))
+      }
+      val plan = Seq("").toDF("s").select(cols: _*).queryExecution.optimizedPlan
+      val (exprs, input) = plan match {
+        case Project(list, rel: LocalRelation) => (list.map(BindReferences.bindReference(_, rel.output)), rel)
+      }
+      assert(exprs.length == 3 * configs.length && input.output.length == 1)
+      val kernels = exprs.flatMap(_.collect { case k: ParseTimestamp => k })
+      assert(kernels.length == configs.length)
+      assert(kernels.forall(_.gates.forall(g => (g != null) == (policy == "CORRECTED"))), policy)
+      val paths: Seq[(String, Expression => InternalRow => Any)] = Seq(
+        "interpreted" -> (e => r => e.eval(r)),
+        "generated" -> { e =>
+          val proj = GenerateMutableProjection.generate(Seq(e))
+          r => proj(r).get(0, TimestampType)
+        })
+      var parsed, threw = 0
+      def same(got: Try[Any], want: Try[Any]): Boolean = (got, want) match {
+        case (Success(a), Success(b)) => a == b
+        case (Failure(a), Failure(b)) => a.getClass == b.getClass
+        case _ => false
+      }
+      for ((path, evaluator) <- paths; ((order, fmt), i) <- configs.zipWithIndex) {
+        val Seq(kernel, replaced, fixed) = exprs.slice(3 * i, 3 * i + 3).map(evaluator)
+        for ((row, s) <- rows.zip(inputs :+ null)) {
+          val got = Try(kernel(row))
+          val at = s"'$s' under $zone/$policy, $path, dateOrder=$order timeFormat=$fmt"
+          assert(same(got, Try(replaced(row))), s"$at: $got vs ${Try(replaced(row))}")
+          if (policy == "CORRECTED") assert(same(got, Try(fixed(row))), s"$at: $got vs fixed ${Try(fixed(row))}")
+          if (got.toOption.exists(_ != null)) parsed += 1
+          if (got.isFailure) threw += 1
+        }
+      }
+      assert(parsed > 0 && parsed < 2 * configs.length * rows.length, s"$zone/$policy")
+      assert((threw > 0) == (policy == "EXCEPTION"), s"$zone/$policy")
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
-    val rows = df.select(col("s") +: cols: _*).collect()
-    for (r <- rows; ((order, fmt), i) <- configs.zipWithIndex)
-      assert(r.get(1 + 2 * i) == r.get(2 + 2 * i),
-        s"'${r.getString(0)}' under dateOrder=$order timeFormat=$fmt")
-    assert(rows.exists(r => r.get(1) != null) && rows.exists(r => r.get(1) == null))
   }
 
   test("metadata attach keeps exact per-file values for ' ', '+' and '%' in " +
@@ -430,6 +491,38 @@ class LoaderSpec extends SparkSpec {
     assert(got == Seq(
       (1.5, plain, ts("2024-01-01 00:00:00"), ts("2024-01-01 01:00:00")),
       (2.5, odd, ts("2024-01-01 01:00:00"), ts("2024-01-01 02:00:00"))))
+  }
+
+  test("file metadata and timestamps attach through one expression each: no ScalaUDF, " +
+    "one parse_timestamp, a plan text that does not grow with the file count, and " +
+    "resample still reuses its bounds exchange") {
+    def load(files: Int): LoadedSeries = {
+      val dir = tmpDir()
+      val fmt = java.time.format.DateTimeFormatter.ofPattern("MM-dd-yyyy HH_mm_ss")
+      val t0 = java.time.LocalDateTime.of(2024, 1, 1, 0, 0)
+      for (i <- 0 until files) {
+        val (s, e) = (t0.plusMinutes(10L * i), t0.plusMinutes(10L * i + 10))
+        Files.writeString(dir.resolve(s"${s.format(fmt)} - ${e.format(fmt)}.csv"),
+          s"timestamp;v\n${s.toLocalDate} ${s.toLocalTime};$i\n")
+      }
+      new TimeSeriesLoader(spark).load(dir.toString)
+    }
+    val (few, many) = (load(3), load(300))
+    for (loaded <- Seq(few, many)) {
+      val exprs = loaded.df.queryExecution.analyzed.flatMap(_.expressions)
+      assert(!exprs.exists(_.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ScalaUDF])))
+      assert(exprs.map(_.collect { case _: ParseTimestamp => 1 }.sum).sum == 1)
+      assert(!exprs.exists(_.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.GetTimestamp])))
+    }
+    // what may differ: the digits of expression ids and file counts, and one
+    // more branch of the file-edge tree in each plan (2 edges for 3 files, 3
+    // for 300; about 350 characters in all). A per-file table would add
+    // 297 entries of 50 characters or more.
+    val lengths = Seq(few, many).map(_.df.queryExecution.toString.length)
+    assert(math.abs(lengths(1) - lengths(0)) < 1000, s"plan text lengths $lengths")
+    val resampled = few.resample("1min", Some("mean"))
+    assert(resampled.collect().length == 21)
+    assert(resampled.queryExecution.executedPlan.toString.contains("ReusedExchange"))
   }
 
   /** Rows per `source_file` of a loaded frame. */
